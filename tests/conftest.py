@@ -21,3 +21,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def set_conf(spark):
+    """Set session confs for one test: ``set_conf(key, value)``. Each
+    conf gets back the value it had before the test, or is unset if it
+    had none."""
+    saved: dict[str, str | None] = {}
+
+    def setter(key: str, value: str) -> None:
+        if key not in saved:
+            saved[key] = spark.conf.getAll.get(key)
+        spark.conf.set(key, value)
+
+    yield setter
+    for key, value in saved.items():
+        if value is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, value)

@@ -12,7 +12,7 @@ from arrow_spark.catalog import table
 from arrow_spark.operators.partitioning import bucketed_join, salted_join, write_bucketed
 
 
-def test_bucketed_join_elides_shuffle(spark, sf_dir):
+def test_bucketed_join_elides_shuffle(spark, sf_dir, set_conf):
     # tables land in ./spark-warehouse (gitignored); warehouse.dir is a
     # static conf and cannot be redirected on a live session
     orders = table(spark, sf_dir, "orders")
@@ -26,7 +26,7 @@ def test_bucketed_join_elides_shuffle(spark, sf_dir):
         sorted_by=["custkey"],
     )
     # broadcast would bypass the bucketing story — force the shuffle path off
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    set_conf("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         j = bucketed_join(spark, "t_orders_b", "t_customer_b", ["custkey"])
         plan = j._jdf.queryExecution().executedPlan().toString()
@@ -35,7 +35,6 @@ def test_bucketed_join_elides_shuffle(spark, sf_dir):
             customer, orders.o_custkey == customer.c_custkey
         ).count()
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64MB")
         spark.sql("DROP TABLE IF EXISTS t_orders_b")
         spark.sql("DROP TABLE IF EXISTS t_customer_b")
 

@@ -29,7 +29,7 @@ def _partition_shares(df):
     return sorted((r["count"] / total for r in counts), reverse=True)
 
 
-def test_salted_join_spreads_zipf_hot_key_across_reducers(spark):
+def test_salted_join_spreads_zipf_hot_key_across_reducers(spark, set_conf):
     """Zipf-keyed input (one key = 60% of rows): the plain equi-join
     lands the hot key's entire output in ONE reducer; the salted join
     spreads it over salt_buckets reducers. Both return identical rows.
@@ -47,27 +47,27 @@ def test_salted_join_spreads_zipf_hot_key_across_reducers(spark):
     )
     # disable broadcast so the join actually exchanges on the key — the
     # skew scenario under test is the shuffle join a 100 TB fact forces
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        plain = left.join(right, "k")
-        salted = salted_join(left, right, "k", salt_buckets=16)
-        plain_shares = _partition_shares(plain)
-        salted_shares = _partition_shares(salted)
-        # the hot key is 60% of output: plain join concentrates it in one
-        # partition; salted must cap the max reducer share well below it
-        assert plain_shares[0] >= 0.55, plain_shares[:3]
-        assert salted_shares[0] <= 0.25, salted_shares[:3]
-        # identical results
-        a = plain.groupBy("k").agg(F.count("*").alias("c"), F.sum("w").alias("s"))
-        b = salted.groupBy("k").agg(F.count("*").alias("c"), F.sum("w").alias("s"))
-        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64MB")
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    set_conf("spark.sql.autoBroadcastJoinThreshold", "-1")
+    set_conf("spark.sql.adaptive.enabled", "false")
+    # the session default is one reducer per CPU; with 4 reducers even a
+    # perfect spread has a largest share of 0.25, so pin enough reducers
+    # for the salt's 16 buckets to spread over
+    set_conf("spark.sql.shuffle.partitions", "32")
+    plain = left.join(right, "k")
+    salted = salted_join(left, right, "k", salt_buckets=16)
+    plain_shares = _partition_shares(plain)
+    salted_shares = _partition_shares(salted)
+    # the hot key is 60% of output: plain join concentrates it in one
+    # partition; salted must cap the max reducer share well below it
+    assert plain_shares[0] >= 0.55, plain_shares[:3]
+    assert salted_shares[0] <= 0.25, salted_shares[:3]
+    # identical results
+    a = plain.groupBy("k").agg(F.count("*").alias("c"), F.sum("w").alias("s"))
+    b = salted.groupBy("k").agg(F.count("*").alias("c"), F.sum("w").alias("s"))
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
-def test_salted_join_plan_exchanges_on_key_and_salt(spark):
+def test_salted_join_plan_exchanges_on_key_and_salt(spark, set_conf):
     """The salted join's exchange must hash on (key, salt) — the salt
     actually reaches the partitioning, it isn't dropped by the
     optimizer."""
@@ -75,12 +75,9 @@ def test_salted_join_plan_exchanges_on_key_and_salt(spark):
     # join condition entirely, leaving only the salt in the exchange
     left = spark.range(100).select((F.col("id") % 3).alias("k"), F.col("id").alias("v"))
     right = spark.range(4).select(F.col("id").alias("k"), F.lit("x").alias("w"))
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = salted_join(left, right, "k", salt_buckets=8)._jdf.queryExecution(
-        ).executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64MB")
+    set_conf("spark.sql.autoBroadcastJoinThreshold", "-1")
+    plan = salted_join(left, right, "k", salt_buckets=8)._jdf.queryExecution(
+    ).executedPlan().toString()
     assert "__salt__" in plan
     import re
 
