@@ -44,6 +44,8 @@ import numpy as _np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from arrow_spark.sources._units import map_units
+
 
 _MASK64 = (1 << 64) - 1
 
@@ -163,17 +165,18 @@ def read_bloom_index(spark: SparkSession, path: str) -> DataFrame:
 def build_bloom_index(
     spark: SparkSession, path: str, column: str, fpp: float = 0.01
 ) -> DataFrame:
-    """Distributed sidecar-bloom build: one task per parquet file, one
-    bloom per row group over ``column``. Returns the index DataFrame
-    (INDEX_SCHEMA); persist it wherever the dataset's metadata lives."""
-    files = _list_parquet_files(spark, path)
-    files_df = spark.createDataFrame(
-        [(f,) for f in files], "file: string"
-    ).repartition(max(1, len(files)))
+    """Distributed sidecar-bloom build: one task per unit, no shuffle —
+    one task per parquet file, one bloom per row group over ``column``.
+    Returns the index DataFrame (INDEX_SCHEMA); persist it wherever the
+    dataset's metadata lives."""
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    def scan_footers(iterator):
+    files = _list_parquet_files(spark, path)
+    arrow_schema = to_arrow_schema(INDEX_SCHEMA)
+
+    def scan_footers(fname):
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
         def _mix64_np(x):
@@ -182,47 +185,51 @@ def build_bloom_index(
             x = (x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
             return x ^ (x >> np.uint64(31))
 
-        for pdf in iterator:
-            out = []
-            for fname in pdf["file"]:
-                pf = pq.ParquetFile(fname)
-                for rg in range(pf.metadata.num_row_groups):
-                    tbl = pf.read_row_group(rg, columns=[column])
-                    col = tbl.column(0).combine_chunks().drop_null()
-                    n_rows = tbl.num_rows
-                    m, k = _bloom_params(n_rows, fpp)
-                    arr = col.to_numpy(zero_copy_only=False)
-                    if np.issubdtype(arr.dtype, np.integer):
-                        # vectorized splitmix64 double hashing: the whole
-                        # row group hashes in a handful of numpy kernels
-                        # (the per-value Python loop was the build's
-                        # dominant cost, measured ~20× slower)
-                        bits_np = np.zeros(m // 8, dtype=np.uint8)
-                        with np.errstate(over="ignore"):
-                            h1 = _mix64_np(arr.astype(np.uint64))
-                            h2 = _mix64_np(h1) | np.uint64(1)
-                            for i in range(k):
-                                pos = (h1 + np.uint64(i) * h2) % np.uint64(m)
-                                np.bitwise_or.at(
-                                    bits_np,
-                                    (pos >> np.uint64(3)).astype(np.int64),
-                                    (
-                                        np.uint64(1) << (pos & np.uint64(7))
-                                    ).astype(np.uint8),
-                                )
-                        bloom = bits_np.tobytes()
-                    else:
-                        bits = bytearray(m // 8)
-                        for v in col.to_pylist():
-                            _bloom_add(bits, m, k, v)
-                        bloom = bytes(bits)
-                    out.append((fname, rg, n_rows, m, k, bloom))
-            yield pd.DataFrame(
-                out,
-                columns=["file", "row_group", "num_rows", "m_bits", "k_hashes", "bloom"],
+        out = []
+        pf = pq.ParquetFile(fname)
+        for rg in range(pf.metadata.num_row_groups):
+            tbl = pf.read_row_group(rg, columns=[column])
+            col = tbl.column(0).combine_chunks().drop_null()
+            n_rows = tbl.num_rows
+            m, k = _bloom_params(n_rows, fpp)
+            arr = col.to_numpy(zero_copy_only=False)
+            if np.issubdtype(arr.dtype, np.integer):
+                # vectorized splitmix64 double hashing: the whole
+                # row group hashes in a handful of numpy kernels
+                # (the per-value Python loop was the build's
+                # dominant cost, measured ~20× slower)
+                bits_np = np.zeros(m // 8, dtype=np.uint8)
+                with np.errstate(over="ignore"):
+                    h1 = _mix64_np(arr.astype(np.uint64))
+                    h2 = _mix64_np(h1) | np.uint64(1)
+                    for i in range(k):
+                        pos = (h1 + np.uint64(i) * h2) % np.uint64(m)
+                        np.bitwise_or.at(
+                            bits_np,
+                            (pos >> np.uint64(3)).astype(np.int64),
+                            (
+                                np.uint64(1) << (pos & np.uint64(7))
+                            ).astype(np.uint8),
+                        )
+                bloom = bits_np.tobytes()
+            else:
+                bits = bytearray(m // 8)
+                for v in col.to_pylist():
+                    _bloom_add(bits, m, k, v)
+                bloom = bytes(bits)
+            out.append(
+                {
+                    "file": fname,
+                    "row_group": rg,
+                    "num_rows": n_rows,
+                    "m_bits": m,
+                    "k_hashes": k,
+                    "bloom": bloom,
+                }
             )
+        yield pa.RecordBatch.from_pylist(out, schema=arrow_schema)
 
-    return files_df.mapInPandas(scan_footers, schema=INDEX_SCHEMA)
+    return map_units(spark, files, scan_footers, INDEX_SCHEMA)
 
 
 def prune_row_groups(index_rows: list, value: object) -> list[tuple[str, int]]:
@@ -285,25 +292,17 @@ def point_lookup(
 
         files = _list_parquet_files(spark, path)
         out_schema = from_arrow_schema(pq.read_schema(files[0]))
-    if not candidates:
-        return spark.createDataFrame([], out_schema)
-    cand_df = spark.createDataFrame(
-        candidates, "file: string, row_group: int"
-    ).repartition(len(candidates))
 
     # mapInArrow keeps the row-group bytes in Arrow end to end.
-    def read_arrow(batches):
+    def read_arrow(candidate):
         import pyarrow.parquet as pq
         import pyarrow.compute as pc
 
-        for b in batches:
-            for fname, rg in zip(
-                b.column("file").to_pylist(), b.column("row_group").to_pylist()
-            ):
-                tbl = pq.ParquetFile(fname).read_row_group(int(rg))
-                tbl = tbl.filter(pc.equal(tbl.column(column), value))
-                for out in tbl.to_batches():
-                    if out.num_rows:
-                        yield out
+        fname, rg = candidate
+        tbl = pq.ParquetFile(fname).read_row_group(int(rg))
+        tbl = tbl.filter(pc.equal(tbl.column(column), value))
+        for out in tbl.to_batches():
+            if out.num_rows:
+                yield out
 
-    return cand_df.mapInArrow(read_arrow, schema=out_schema)
+    return map_units(spark, candidates, read_arrow, out_schema)

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from arrow_spark.sources._units import map_units
+
 
 def _flight():
     try:
@@ -230,8 +232,9 @@ def exchange_flight(
 def read_flight_info(
     spark: SparkSession, info, location: str, token: str | None = None
 ) -> DataFrame:
-    """Endpoint-parallel read of an already-fetched FlightInfo: one Spark
-    task per endpoint, DoGet(ticket) inside mapInArrow. Shared by
+    """Endpoint-parallel read of an already-fetched FlightInfo: one task
+    per unit, no shuffle — each endpoint is one Spark task running
+    DoGet(ticket) inside mapInArrow. Shared by
     read_flight (path descriptors) and flight_sql (command descriptors).
     """
     _flight()
@@ -251,21 +254,13 @@ def read_flight_info(
         )
         for ep in info.endpoints
     ]
-    eps_df = spark.createDataFrame(
-        endpoints,
-        T.StructType(
-            [
-                T.StructField("ticket", T.BinaryType(), False),
-                T.StructField("location", T.StringType(), False),
-            ]
-        ),
-    ).repartition(max(len(endpoints), 1))
 
-    def read_endpoint(batches):
+    def read_endpoint(endpoint):
         import pyarrow.flight as fl
 
         from arrow_spark.types import normalize_arrow_schema, normalize_batch
 
+        raw, loc = endpoint
         opts = (
             fl.FlightCallOptions(
                 headers=[(b"authorization", f"Bearer {token}".encode())]
@@ -273,17 +268,12 @@ def read_flight_info(
             if token is not None
             else None
         )
-        for b in batches:
-            tickets = b.column("ticket").to_pylist()
-            locs = b.column("location").to_pylist()
-            for raw, loc in zip(tickets, locs):
-                cl = fl.connect(loc)
-                reader = cl.do_get(fl.Ticket.deserialize(raw), options=opts)
-                for chunk in reader:
-                    tgt, changed = normalize_arrow_schema(chunk.data.schema)
-                    yield normalize_batch(chunk.data, tgt) if changed else chunk.data
+        reader = fl.connect(loc).do_get(fl.Ticket.deserialize(raw), options=opts)
+        for chunk in reader:
+            tgt, changed = normalize_arrow_schema(chunk.data.schema)
+            yield normalize_batch(chunk.data, tgt) if changed else chunk.data
 
-    return eps_df.mapInArrow(read_endpoint, schema=spark_schema)
+    return map_units(spark, endpoints, read_endpoint, spark_schema)
 
 
 def read_flight(
@@ -336,4 +326,6 @@ def write_flight(
         yield pa.RecordBatch.from_pylist([{"written": 1}], schema=count_schema)
 
     sink_schema = T.StructType([T.StructField("written", T.LongType(), True)])
-    schema_df.mapInArrow(put_partition, schema=sink_schema).count()
+    schema_df.mapInArrow(put_partition, schema=sink_schema).write.format("noop").mode(
+        "overwrite"
+    ).save()

@@ -25,6 +25,8 @@ from collections.abc import Iterator, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from arrow_spark.sources._units import map_units
+
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 
@@ -119,7 +121,9 @@ def _plan_splits(files: list[str], target_tasks: int) -> list[tuple[str, int, in
 
 
 def read_ipc(spark: SparkSession, path: str | list[str]) -> DataFrame:
-    """Read Arrow IPC file(s) into a DataFrame, tasks per batch-range.
+    """Read Arrow IPC file(s) into a DataFrame, tasks per batch-range:
+    one task per unit, no shuffle (at most 64 tasks; past that each task
+    reads a contiguous run of units).
 
     Schema comes from the first file's IPC footer (dataset-discovery
     style); partitions stream RecordBatches through mapInArrow without
@@ -127,8 +131,6 @@ def read_ipc(spark: SparkSession, path: str | list[str]) -> DataFrame:
     single-directory input surface as string partition columns, exactly
     like Spark's parquet reader.
     """
-    import json
-
     import pyarrow as pa
 
     from arrow_spark.types import normalize_arrow_schema, normalize_batch
@@ -165,25 +167,18 @@ def read_ipc(spark: SparkSession, path: str | list[str]) -> DataFrame:
         + [T.StructField(k, T.StringType(), True) for k in part_keys]
     )
 
-    units = _plan_splits(files, spark.sparkContext.defaultParallelism)
     kv_by_file = dict(zip(files, part_vals))
-    rows = [(p, s, e, json.dumps(kv_by_file.get(p, {}))) for p, s, e in units]
-    units_df = spark.createDataFrame(
-        rows,
-        T.StructType(
-            [
-                T.StructField("path", T.StringType(), False),
-                T.StructField("start", T.IntegerType(), False),
-                T.StructField("end", T.IntegerType(), False),
-                T.StructField("pkv", T.StringType(), False),
-            ]
-        ),
-    ).repartition(min(len(rows), 64))
+    units = [
+        (p, s, e, kv_by_file.get(p, {}))
+        for p, s, e in _plan_splits(files, spark.sparkContext.defaultParallelism)
+    ]
 
-    def read_units(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def read_unit(unit) -> Iterator[pa.RecordBatch]:
         import pyarrow.ipc as ipc
 
-        def emit(raw: pa.RecordBatch, kv: dict) -> pa.RecordBatch:
+        p, s, e, kv = unit
+
+        def emit(raw: pa.RecordBatch) -> pa.RecordBatch:
             # normalize Arrow-only types (unsigned, time, half, views,
             # dictionary) to the Spark-representable schema — SURVEY §1.2
             out = normalize_batch(raw, schema) if needs_normalize else raw
@@ -193,34 +188,26 @@ def read_ipc(spark: SparkSession, path: str | list[str]) -> DataFrame:
                 )
             return out
 
-        for b in batches:
-            for p, s, e, kvs in zip(
-                b.column("path").to_pylist(),
-                b.column("start").to_pylist(),
-                b.column("end").to_pylist(),
-                b.column("pkv").to_pylist(),
-            ):
-                kv = json.loads(kvs)
-                if e >= 0:
-                    with ipc.open_file(p) as reader:
-                        for i in range(s, e):
-                            yield emit(reader.get_batch(i), kv)
-                else:
-                    # guard only the open: batch/cast errors must surface,
-                    # not get misread as "try the stream format instead"
-                    try:
-                        reader = ipc.open_file(p)
-                    except pa.ArrowInvalid:
-                        reader = None
-                    if reader is not None:
-                        for i in range(reader.num_record_batches):
-                            yield emit(reader.get_batch(i), kv)
-                    else:
-                        with ipc.open_stream(p) as sr:
-                            for raw in sr:
-                                yield emit(raw, kv)
+        if e >= 0:
+            with ipc.open_file(p) as reader:
+                for i in range(s, e):
+                    yield emit(reader.get_batch(i))
+            return
+        # guard only the open: batch/cast errors must surface,
+        # not get misread as "try the stream format instead"
+        try:
+            reader = ipc.open_file(p)
+        except pa.ArrowInvalid:
+            reader = None
+        if reader is not None:
+            for i in range(reader.num_record_batches):
+                yield emit(reader.get_batch(i))
+        else:
+            with ipc.open_stream(p) as sr:
+                for raw in sr:
+                    yield emit(raw)
 
-    return units_df.mapInArrow(read_units, schema=out_schema)
+    return map_units(spark, units, read_unit, out_schema, tasks=min(len(units), 64))
 
 
 def write_ipc(
@@ -307,4 +294,6 @@ def write_ipc(
         yield pa.RecordBatch.from_pylist([{"written": 1}], schema=count_schema)
 
     sink_schema = T.StructType([T.StructField("written", T.LongType(), True)])
-    df.mapInArrow(write_partition, schema=sink_schema).count()
+    df.mapInArrow(write_partition, schema=sink_schema).write.format("noop").mode(
+        "overwrite"
+    ).save()

@@ -7,6 +7,7 @@ statistics that drive scan planning. DuckDB exposes the same thing as
 ``parquet_metadata()``; this module is the Spark-native equivalent:
 
 - one Spark task per data file opens ONLY the footer (pyarrow),
+  launched straight from the file list (no shuffle),
 - emits one row per (file, row_group, column chunk) with counts, null /
   min / max statistics, encodings-level sizes and offsets,
 - nothing but metadata rows ever moves — at 100 TB this reads a few KiB
@@ -24,6 +25,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from arrow_spark.sources._units import map_units
 
 META_SCHEMA = (
     "file_name string, row_group_id int, row_group_num_rows long, "
@@ -44,22 +48,27 @@ def _files_for(spark: SparkSession, path: str | list[str]) -> list[str]:
     # (part files inside) — only a plain local file short-circuits
     if path.endswith(".parquet") and not os.path.isdir(path):
         return [path]
-    return sorted(spark.read.parquet(path).inputFiles())
+    # binaryFile lists the same files as the parquet reader (same file
+    # index, same hidden-file and partition-directory rules) without
+    # running a schema-inference job
+    return sorted(spark.read.format("binaryFile").load(path).inputFiles())
 
 
 def parquet_metadata(spark: SparkSession, path: str | list[str]) -> DataFrame:
     """Footer metadata of a parquet dataset, one row per column chunk.
 
     ``path`` may be a file, a dataset directory, or an explicit file
-    list. The footer scan runs as one Spark task per file.
+    list. The footer scan is one task per unit, no shuffle: one Spark
+    task per file, at most 64 tasks (past that each task reads a
+    contiguous run of files).
     """
-    files = _files_for(spark, path)
-    files_df = spark.createDataFrame(
-        [(f,) for f in files], "file string"
-    ).repartition(max(1, min(len(files), 64)))
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    def scan(batches):
-        import pandas as pd
+    files = _files_for(spark, path)
+    arrow_schema = to_arrow_schema(StructType.fromDDL(META_SCHEMA))
+
+    def scan(fname):
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
         def _stat_str(v):
@@ -72,44 +81,42 @@ def parquet_metadata(spark: SparkSession, path: str | list[str]) -> DataFrame:
                     return v.hex()
             return str(v)
 
-        for b in batches:
-            rows = []
-            for fname in b["file"]:
-                local = fname
-                if local.startswith("file:"):
-                    local = local[len("file:"):]
-                    while local.startswith("//") and not os.path.exists(local):
-                        local = local[1:]
-                md = pq.ParquetFile(local).metadata
-                base = os.path.basename(local)
-                for rg in range(md.num_row_groups):
-                    rgm = md.row_group(rg)
-                    for ci in range(rgm.num_columns):
-                        c = rgm.column(ci)
-                        st = c.statistics
-                        rows.append(
-                            {
-                                "file_name": base,
-                                "row_group_id": rg,
-                                "row_group_num_rows": rgm.num_rows,
-                                "column_id": ci,
-                                "path_in_schema": c.path_in_schema,
-                                "physical_type": c.physical_type,
-                                "num_values": c.num_values,
-                                "null_count": st.null_count if st and st.has_null_count else None,
-                                "distinct_count": st.distinct_count
-                                if st and st.has_distinct_count
-                                else None,
-                                "min_value": _stat_str(st.min if st and st.has_min_max else None),
-                                "max_value": _stat_str(st.max if st and st.has_min_max else None),
-                                "compression": c.compression,
-                                "total_compressed_size": c.total_compressed_size,
-                                "total_uncompressed_size": c.total_uncompressed_size,
-                                "data_page_offset": c.data_page_offset,
-                                "dictionary_page_offset": c.dictionary_page_offset,
-                            }
-                        )
-            if rows:
-                yield pd.DataFrame(rows)
+        local = fname
+        if local.startswith("file:"):
+            local = local[len("file:"):]
+            while local.startswith("//") and not os.path.exists(local):
+                local = local[1:]
+        md = pq.ParquetFile(local).metadata
+        base = os.path.basename(local)
+        rows = []
+        for rg in range(md.num_row_groups):
+            rgm = md.row_group(rg)
+            for ci in range(rgm.num_columns):
+                c = rgm.column(ci)
+                st = c.statistics
+                rows.append(
+                    {
+                        "file_name": base,
+                        "row_group_id": rg,
+                        "row_group_num_rows": rgm.num_rows,
+                        "column_id": ci,
+                        "path_in_schema": c.path_in_schema,
+                        "physical_type": c.physical_type,
+                        "num_values": c.num_values,
+                        "null_count": st.null_count if st and st.has_null_count else None,
+                        "distinct_count": st.distinct_count
+                        if st and st.has_distinct_count
+                        else None,
+                        "min_value": _stat_str(st.min if st and st.has_min_max else None),
+                        "max_value": _stat_str(st.max if st and st.has_min_max else None),
+                        "compression": c.compression,
+                        "total_compressed_size": c.total_compressed_size,
+                        "total_uncompressed_size": c.total_uncompressed_size,
+                        "data_page_offset": c.data_page_offset,
+                        "dictionary_page_offset": c.dictionary_page_offset,
+                    }
+                )
+        if rows:
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
 
-    return files_df.mapInPandas(scan, schema=META_SCHEMA)
+    return map_units(spark, files, scan, META_SCHEMA, tasks=min(len(files), 64))
