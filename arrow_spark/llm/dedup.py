@@ -718,9 +718,26 @@ def connected_components(
     ids do not), while two-phase converged in 11 rounds (≈ log2 n, the
     paper's bound — round count is geometry-independent). On the
     dbscan ε-graph at sf0.1 the same swap cut 16 rounds to 6.
-    Convergence is checked by TWO-SIDED set equality of consecutive
-    edge sets (one-sided "no new edges" is insufficient: a round may
-    strictly shrink the set) and asserted, not assumed.
+
+    Convergence is an exact shape test on each round's output edge set
+    (canonical, u < v): it is a STAR FOREST iff no vertex is both a
+    parent (a u) and a child (a v), and no vertex is a child more than
+    once. Both halves are needed — with only the first, the chain
+    0-5-3-6-2-1-4 stops while vertex 1 is still the child of two
+    centers and labels {6, 2, 1, 4} as 1. A star forest is a fixpoint
+    of one round, so stopping there returns exactly the set that
+    waiting for two equal consecutive rounds would return a round later:
+      * take a star with center r and leaves L, every l > r;
+      * large-star at r: m = min({r} ∪ L) = r, emit (l, r) per leaf;
+      * large-star at a leaf l: its only neighbor r < l, emit nothing;
+      * small-star on {(l, r)}: each l's min is r, emit (r, l) and
+        (r, r), and the self-loop is dropped;
+      * so the round maps the star to itself, and stars never interact.
+    Each round connects the same vertices as its input, so every star
+    is a whole component and its center the component minimum. The
+    test is one aggregation over the round's output and is the round's
+    only Spark action. ``max_iter`` counts rounds including the one
+    that finds the star forest; no confirmation round follows it.
 
     Scale notes: the canonical edge frame is checkpointed once (the
     possibly-expensive pair-generation lineage is computed exactly
@@ -745,14 +762,12 @@ def connected_components(
     # round 0 consumes the raw frame directly (canonicalization inlined,
     # no up-front distinct — the min-aggregations are duplicate-blind
     # and the round's final dedupe canonicalizes): one fewer eager
-    # materialization. The fixpoint check starts at round 1, comparing
-    # consecutive ROUND OUTPUTS, so correctness is untouched.
+    # materialization. The star-forest test reads only round outputs,
+    # which are canonical and distinct, so correctness is untouched.
     cur = ec.where(F.col("u") != F.col("v")).select(
         F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
     )
-    prev = None
-    prev_count = -1
-    converged = False
+    gen = None
     for _ in range(max_iter):
         # large-star: around every center c, point each LARGER neighbor
         # n at m = min(closed neighborhood of c)
@@ -781,68 +796,51 @@ def connected_components(
             .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
             .distinct()
         )
-        # LAZY checkpoint + count-as-materializer (r14): the convergence
-        # count below is the round's ONE action — it computes the round,
-        # persists the generation, and returns the cardinality, where the
-        # r13 shape paid two actions (eager checkpoint, then a count over
-        # the persisted blocks). prev's generation is released only AFTER
-        # the count materializes new (lazy mode forbids `release=`: new's
-        # computation still reads prev's checkpoint blocks).
+        # LAZY checkpoint + test-as-materializer (r14): the star-forest
+        # count below is the round's ONE action — it computes the round
+        # and persists the generation. The predecessor is released only
+        # AFTER that action (lazy mode forbids `release=`: new's
+        # computation still reads its checkpoint blocks).
         new = ckpt_reset_stats(ss, eager=False)
-        n_new = new.count()
-        # convergence = two-sided set equality of consecutive ROUND
-        # OUTPUTS (round 0 has no materialized predecessor to compare).
-        # Cheap sound filter first: different cardinalities can never be
-        # equal sets — prev's count is carried in a Python variable
-        # (ADVICE r13: it was re-counted every round), so the
-        # two-anti-join check — rows in exactly one of {new, prev} — only
-        # runs in the final round or two when counts have stabilized.
-        changed = 1
-        if prev is not None and n_new == prev_count:
-            changed = (
-                new.join(prev, ["u", "v"], "left_anti")
-                .select(F.lit(1).alias("one"))
-                .union(
-                    prev.join(new, ["u", "v"], "left_anti").select(
-                        F.lit(1).alias("one")
-                    )
-                )
-                .count()
-            )
-        if prev is not None:
-            ckpt_release(prev)
-        prev = new
-        prev_count = n_new
-        cur = new
-        if changed == 0:
-            converged = True
+        # a vertex violates iff it is a child at least once and appears
+        # in at least two rows: then it is also a parent, or a child twice
+        roles = new.select(F.col("u").alias("x"), F.lit(0).alias("child")).union(
+            new.select(F.col("v").alias("x"), F.lit(1).alias("child"))
+        )
+        violations = (
+            roles.groupBy("x")
+            .agg(F.sum("child").alias("c"), F.count("*").alias("k"))
+            .where((F.col("c") > 0) & (F.col("k") > 1))
+            .count()
+        )
+        if gen is not None:
+            ckpt_release(gen)
+        gen = cur = new
+        if violations == 0:
             break
-    if not converged:
+    else:
         # release the live generations before raising (ADVICE r13: the
         # error path leaked the persisted ec + final-round blocks)
         ckpt_release(ec)
-        if prev is not None:
-            ckpt_release(prev)
+        if gen is not None:
+            ckpt_release(gen)
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds"
         )
-    # fixpoint = star forest (child v → root u = component min); emit
-    # every vertex of the original edge list, singletons labelling
-    # themselves
-    comp = (
-        cur.select(F.col("v").alias("vtx"), F.col("u").alias("component"))
-        .union(cur.select(F.col("u").alias("vtx"), F.col("u").alias("component")))
-        .groupBy("vtx")
-        .agg(F.min("component").alias("component"))
+    # star forest: child v → center u = component min. One aggregation
+    # labels every vertex of the original edge list: each endpoint
+    # offers itself, each star edge offers its center to its leaf, so
+    # singletons and self-loop-only vertices label themselves. The
+    # coalesce keeps `component` as nullable as the input ids.
+    offers = (
+        ec.select(F.col("u").alias("x"), F.col("u").alias("c"))
+        .union(ec.select(F.col("v").alias("x"), F.col("v").alias("c")))
+        .union(cur.select(F.col("v").alias("x"), F.col("u").alias("c")))
     )
-    verts = ec.select(F.col("u").alias("x")).union(
-        ec.select(F.col("v").alias("x"))
-    ).distinct()
     out = ckpt_reset_stats(
-        verts.join(comp, verts.x == comp.vtx, "left").select(
-            F.col("x").alias("v"),
-            F.coalesce("component", F.col("x")).alias("component"),
-        )
+        offers.groupBy("x")
+        .agg(F.min("c").alias("c"))
+        .select(F.col("x").alias("v"), F.coalesce("c", "x").alias("component"))
     )
     ckpt_release(ec)
     ckpt_release(cur)
@@ -881,6 +879,10 @@ def near_dup_clusters(
     Jaccard, honoring ``block_cols``/length blocking). Bucket-quadratic
     pair verification — the small-sf oracle verifier, not the scale
     path.
+
+    ``max_iter`` caps the connected-components rounds, counting the
+    round that stops the loop; it raises ``RuntimeError`` when the
+    pair graph needs more.
     """
     if pair_source == "exact":
         pairs = jaccard_near_dup_pairs(

@@ -127,6 +127,8 @@ def dbscan(
     Scale: one radius self-join (grid-blocked, lossless), one count,
     the CC loop over CORE-core edges only (dense regions are
     near-cliques — tiny diameter), one border assignment join.
+    ``max_iter`` caps the CC rounds, counting the round that stops it;
+    it raises ``RuntimeError`` when the core graph needs more.
     """
     from arrow_spark.llm.dedup import connected_components
 

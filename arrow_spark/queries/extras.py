@@ -2379,7 +2379,8 @@ def spatial_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # max_iter bounds the closure at the giant component's hop diameter
     # (≈ plane diagonal / eps ≈ 24 at sf0.1 — the loop exits early once
-    # labels stop changing, so small scales don't pay for the headroom)
+    # its edge set is a star forest, so small scales don't pay for the
+    # headroom)
     return dbscan(pts, "id", eps=60_000, min_pts=3, max_iter=64)
 
 

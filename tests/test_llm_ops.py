@@ -185,16 +185,19 @@ def test_connected_components_scrambled_id_chain(spark):
     assert {r.component for r in out} == {min(ids)}
 
 
-def test_connected_components_matches_union_find(spark):
+@pytest.mark.parametrize("n_edges", [400, 60])
+@pytest.mark.parametrize("seed", [123456789, 1, 7, 99, 2024])
+def test_connected_components_matches_union_find(spark, seed, n_edges):
     # Property test vs a driver-side union-find ground truth on a
     # deterministic pseudo-random multigraph with self-loops, stars,
     # and isolated-by-self-loop vertices — the equivalence evidence the
-    # r13 verdict asked to have committed, not narrated.
+    # r13 verdict asked to have committed, not narrated. 400 edges on
+    # 97 ids make one giant component; 60 make a forest of small trees.
     from arrow_spark.llm.dedup import connected_components
 
     rows = []
-    x = 123456789
-    for _ in range(400):
+    x = seed
+    for _ in range(n_edges):
         # xorshift32: deterministic, no RNG module state
         x ^= (x << 13) & 0xFFFFFFFF
         x ^= x >> 17
@@ -230,6 +233,66 @@ def test_connected_components_matches_union_find(spark):
 
     got = {r.v: r.component for r in connected_components(edges).collect()}
     assert got == want
+
+
+def test_connected_components_star_forest_input_stops_after_one_round(
+    spark, monkeypatch
+):
+    # A star forest is a fixpoint of one round, and the star-forest test
+    # recognizes it in that round: three generations (input, the one
+    # round, output), with no confirmation round.
+    import arrow_spark.llm.dedup as dedup
+
+    calls = []
+    real = dedup.ckpt_reset_stats
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(dedup, "ckpt_reset_stats", counting)
+    edges = spark.createDataFrame(
+        [(1, 2), (1, 3), (1, 4), (7, 8)], "id_a long, id_b long"
+    )
+    got = {r.v: r.component for r in dedup.connected_components(edges).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 7: 7, 8: 7}
+    assert len(calls) == 3
+
+
+@pytest.mark.parametrize(
+    "chain",
+    [
+        [0, 5, 3, 6, 2, 1, 4],
+        [1, 3, 4, 8, 2, 10, 9, 11, 0, 5, 7, 6],
+    ],
+    ids=["7", "12"],
+)
+def test_connected_components_chain_needs_both_star_conditions(spark, chain):
+    # On these chains an intermediate round has no vertex that is both a
+    # parent and a child, but still has a child of two centers; stopping
+    # there would split the chain (the first would label {6, 2, 1, 4} as 1).
+    from arrow_spark.llm.dedup import connected_components
+
+    edges = spark.createDataFrame(
+        list(zip(chain, chain[1:])), "id_a long, id_b long"
+    )
+    got = {r.v: r.component for r in connected_components(edges).collect()}
+    assert got == {v: 0 for v in chain}
+
+
+def test_connected_components_non_convergence_raises_and_frees(spark):
+    # max_iter=1 cannot finish a 600-vertex chain: the loop must raise
+    # and release every generation it persisted on the way out.
+    from arrow_spark.llm.dedup import connected_components
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(600)], "id_a long, id_b long"
+    )
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        connected_components(edges, max_iter=1)
+    assert persistent().size() <= before
 
 
 def test_near_dup_clusters_transitive_merge(spark):
