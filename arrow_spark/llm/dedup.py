@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from ..checkpoint import ckpt_release, ckpt_reset_stats
+from ..checkpoint import Generations
 
 
 def normalize_text(col):
@@ -685,12 +685,6 @@ def embedding_near_dup_pairs(
     return out
 
 
-# ckpt_reset_stats moved to arrow_spark/checkpoint.py in r13 so the six
-# graph operators (pagerank/labelprop/kcore/ktruss/shortest_paths/
-# triangles) can share the one audited implementation; re-exported here
-# because every r12-era caller and test imports it from this module.
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
@@ -755,20 +749,8 @@ def connected_components(
     can't pick them up via ReusedExchange (SCALE.md round-1 lesson).
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    # one materialization of the pair-generation lineage; vertices
-    # (self-loop-only ones included) and the canonical simple edges
-    # both derive from it
-    ec = ckpt_reset_stats(e)
-    # round 0 consumes the raw frame directly (canonicalization inlined,
-    # no up-front distinct — the min-aggregations are duplicate-blind
-    # and the round's final dedupe canonicalizes): one fewer eager
-    # materialization. The star-forest test reads only round outputs,
-    # which are canonical and distinct, so correctness is untouched.
-    cur = ec.where(F.col("u") != F.col("v")).select(
-        F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-    )
-    gen = None
-    for _ in range(max_iter):
+
+    def step(cur: DataFrame, _: int) -> DataFrame:
         # large-star: around every center c, point each LARGER neighbor
         # n at m = min(closed neighborhood of c)
         sym = cur.select(F.col("u").alias("c"), F.col("v").alias("n")).union(
@@ -788,7 +770,7 @@ def connected_components(
             F.greatest("u", "v").alias("c"), F.least("u", "v").alias("n")
         )
         m2 = can.groupBy("c").agg(F.min("n").alias("m"))
-        ss = (
+        return (
             can.join(m2, "c")
             .select(F.col("n").alias("a"), F.col("m").alias("b"))
             .union(m2.select(F.col("c").alias("a"), F.col("m").alias("b")))
@@ -796,12 +778,8 @@ def connected_components(
             .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
             .distinct()
         )
-        # LAZY checkpoint + test-as-materializer (r14): the star-forest
-        # count below is the round's ONE action — it computes the round
-        # and persists the generation. The predecessor is released only
-        # AFTER that action (lazy mode forbids `release=`: new's
-        # computation still reads its checkpoint blocks).
-        new = ckpt_reset_stats(ss, eager=False)
+
+    def star_forest(new: DataFrame) -> bool:
         # a vertex violates iff it is a child at least once and appears
         # in at least two rows: then it is also a parent, or a child twice
         roles = new.select(F.col("u").alias("x"), F.lit(0).alias("child")).union(
@@ -813,38 +791,46 @@ def connected_components(
             .where((F.col("c") > 0) & (F.col("k") > 1))
             .count()
         )
-        if gen is not None:
-            ckpt_release(gen)
-        gen = cur = new
-        if violations == 0:
-            break
-    else:
-        # release the live generations before raising (ADVICE r13: the
-        # error path leaked the persisted ec + final-round blocks)
-        ckpt_release(ec)
-        if gen is not None:
-            ckpt_release(gen)
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds"
+        return violations == 0
+
+    with Generations("connected_components") as g:
+        # one materialization of the pair-generation lineage; vertices
+        # (self-loop-only ones included) and the canonical simple edges
+        # both derive from it
+        ec = g.ckpt(e)
+        # round 0 consumes the raw frame directly (canonicalization
+        # inlined, no up-front distinct — the min-aggregations are
+        # duplicate-blind and the round's final dedupe canonicalizes): one
+        # fewer eager materialization. The star-forest test reads only
+        # round outputs, which are canonical and distinct, so correctness
+        # is untouched.
+        cur = ec.where(F.col("u") != F.col("v")).select(
+            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
         )
-    # star forest: child v → center u = component min. One aggregation
-    # labels every vertex of the original edge list: each endpoint
-    # offers itself, each star edge offers its center to its leaf, so
-    # singletons and self-loop-only vertices label themselves. The
-    # coalesce keeps `component` as nullable as the input ids.
-    offers = (
-        ec.select(F.col("u").alias("x"), F.col("u").alias("c"))
-        .union(ec.select(F.col("v").alias("x"), F.col("v").alias("c")))
-        .union(cur.select(F.col("v").alias("x"), F.col("u").alias("c")))
-    )
-    out = ckpt_reset_stats(
-        offers.groupBy("x")
-        .agg(F.min("c").alias("c"))
-        .select(F.col("x").alias("v"), F.coalesce("c", "x").alias("component"))
-    )
-    ckpt_release(ec)
-    ckpt_release(cur)
-    return out
+        # LAZY checkpoint + test-as-materializer (r14): the star-forest
+        # count is the round's ONE action — it computes the round and
+        # persists the generation, and only then is the predecessor
+        # released. Raises when max_iter rounds pass without a star
+        # forest; the scope frees every generation on the way out.
+        cur = g.iterate(cur, step, max_iter, until=star_forest)
+        # star forest: child v → center u = component min. One
+        # aggregation labels every vertex of the original edge list: each
+        # endpoint offers itself, each star edge offers its center to its
+        # leaf, so singletons and self-loop-only vertices label
+        # themselves. The coalesce keeps `component` as nullable as the
+        # input ids.
+        offers = (
+            ec.select(F.col("u").alias("x"), F.col("u").alias("c"))
+            .union(ec.select(F.col("v").alias("x"), F.col("v").alias("c")))
+            .union(cur.select(F.col("v").alias("x"), F.col("u").alias("c")))
+        )
+        return g.keep(
+            g.ckpt(
+                offers.groupBy("x")
+                .agg(F.min("c").alias("c"))
+                .select(F.col("x").alias("v"), F.coalesce("c", "x").alias("component"))
+            )
+        )
 
 
 def near_dup_clusters(

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..checkpoint import ckpt_release, ckpt_reset_stats
+from ..checkpoint import Generations, ckpt_release
 
 
 def _as_double(col):
@@ -399,7 +399,9 @@ def ivf_train_centroids(
     shuffle); the update shuffles (cid, dim) partial sums — map-side
     combine makes the shuffle k·dim rows regardless of corpus size.
     """
-    cents, _indexed = ivf_build_index(corpus, n_clusters, n_iters, id_col, vec_col)
+    cents, indexed = ivf_build_index(corpus, n_clusters, n_iters, id_col, vec_col)
+    # cents is built from driver lists: nothing reads the inverted file
+    ckpt_release(indexed)
     return cents
 
 
@@ -425,67 +427,66 @@ def ivf_build_index(
     and serve many query batches from.
     """
     n_iters = max(1, n_iters)
-    # Checkpoint the loop-invariant training relation ONCE (the graph-
-    # loop edge-frame pattern): every Lloyd iteration maps the corpus
-    # vectors through _nearest_centroids, so an unmaterialized lineage
-    # would re-scan + re-project the corpus n_iters times.
-    c = ckpt_reset_stats(
-        corpus.select(F.col(id_col).alias("nid"), _as_double(F.col(vec_col)).alias("nv"))
-    )
-    # init = the n_clusters lowest ids. A k-row driver collect (k ≤ a few
-    # hundred — index-build metadata, not data) assigns cid 0..k-1 by id
-    # order.
-    #
-    # r14: centroid state lives DRIVER-SIDE between iterations (the
-    # pinned_lloyd / exact-replay precedent — centroids are k rows of
-    # index metadata, not data). The r13 shape paid, per iteration, one
-    # k-row collect, one k×k join, and one eager checkpoint action; now
-    # the M-step's updated.collect() is the iteration's ONLY action and
-    # the Python dict merge replicates the old left-join + coalesce
-    # (empty clusters keep their previous centroid) exactly. The Spark-
-    # side arithmetic — assignment matmul, round(avg, 6) means — is
-    # byte-for-byte the same plan, so assignments and means are
-    # unchanged.
-    init_rows = (
-        c.select("nid", "nv").orderBy("nid").limit(n_clusters).collect()
-    )
-    cent_list = [(i, list(r["nv"])) for i, r in enumerate(init_rows)]
-    indexed = None
-    for i in range(n_iters):
-        if i == n_iters - 1:
-            # Materialize the final assignment once: the closing M-step
-            # below AND every probe-time consumer read this checkpoint,
-            # so the corpus is assigned n_iters times total (previously
-            # n_iters + 1: ivf_topk re-ran _nearest_centroids over the
-            # whole corpus against the final centroids).
-            assigned = _nearest_centroids(c, cent_list, "nv", "nid", 1)
-            assigned = assigned.localCheckpoint(eager=True)
-            indexed = assigned
-            partials = _mean_partials_from_assigned(
-                assigned, ["cid"], "nv"
-            )
-        else:
-            # FUSED E+M step (r14, guide §4/§2): the same Arrow pass
-            # that argmins each batch also emits per-batch partial sums
-            # (cid, pos, cnt, psum) — k·dim rows per batch instead of
-            # corpus·dim exploded rows through the shuffle. Assignment
-            # arithmetic is _nearest_centroids' byte-for-byte (same d²
-            # matmul, argmin == stable-argsort head); the mean becomes
-            # round(Σ psum / Σ cnt, 6) instead of round(avg(val), 6) —
-            # the same double-accumulation class whose ordering noise
-            # the 6-decimal round exists to absorb (the old avg already
-            # reassociated freely across AQE partial aggregates).
-            partials = _assign_mean_partials(c, cent_list, "nv")
-        dims = partials.groupBy("cid", "pos").agg(
-            F.round(F.sum("psum") / F.sum("cnt"), 6).alias("m")
+    with Generations("ivf_build_index") as g:
+        # Checkpoint the loop-invariant training relation ONCE (the graph-
+        # loop edge-frame pattern): every Lloyd iteration maps the corpus
+        # vectors through _nearest_centroids, so an unmaterialized lineage
+        # would re-scan + re-project the corpus n_iters times.
+        c = g.ckpt(
+            corpus.select(F.col(id_col).alias("nid"), _as_double(F.col(vec_col)).alias("nv"))
         )
-        new_cv = _assemble_means(dims.collect(), key_cols=("cid",))
-        # empty clusters keep their previous centroid (the old left
-        # join's coalesce)
-        cent_list = [(cid, new_cv.get((cid,), cv)) for cid, cv in cent_list]
-    # the final `indexed` checkpoint is what consumers read; the
-    # training relation's generation is done
-    ckpt_release(c)
+        # init = the n_clusters lowest ids. A k-row driver collect (k ≤ a few
+        # hundred — index-build metadata, not data) assigns cid 0..k-1 by id
+        # order.
+        #
+        # r14: centroid state lives DRIVER-SIDE between iterations (the
+        # pinned_lloyd / exact-replay precedent — centroids are k rows of
+        # index metadata, not data). The r13 shape paid, per iteration, one
+        # k-row collect, one k×k join, and one eager checkpoint action; now
+        # the M-step's updated.collect() is the iteration's ONLY action and
+        # the Python dict merge replicates the old left-join + coalesce
+        # (empty clusters keep their previous centroid) exactly. The Spark-
+        # side arithmetic — assignment matmul, round(avg, 6) means — is
+        # byte-for-byte the same plan, so assignments and means are
+        # unchanged.
+        init_rows = (
+            c.select("nid", "nv").orderBy("nid").limit(n_clusters).collect()
+        )
+        cent_list = [(i, list(r["nv"])) for i, r in enumerate(init_rows)]
+        indexed = None
+        for i in range(n_iters):
+            if i == n_iters - 1:
+                # Materialize the final assignment once: the closing M-step
+                # below AND every probe-time consumer read this checkpoint,
+                # so the corpus is assigned n_iters times total (previously
+                # n_iters + 1: ivf_topk re-ran _nearest_centroids over the
+                # whole corpus against the final centroids).
+                assigned = g.ckpt(_nearest_centroids(c, cent_list, "nv", "nid", 1))
+                indexed = g.keep(assigned)
+                partials = _mean_partials_from_assigned(
+                    assigned, ["cid"], "nv"
+                )
+            else:
+                # FUSED E+M step (r14, guide §4/§2): the same Arrow pass
+                # that argmins each batch also emits per-batch partial sums
+                # (cid, pos, cnt, psum) — k·dim rows per batch instead of
+                # corpus·dim exploded rows through the shuffle. Assignment
+                # arithmetic is _nearest_centroids' byte-for-byte (same d²
+                # matmul, argmin == stable-argsort head); the mean becomes
+                # round(Σ psum / Σ cnt, 6) instead of round(avg(val), 6) —
+                # the same double-accumulation class whose ordering noise
+                # the 6-decimal round exists to absorb (the old avg already
+                # reassociated freely across AQE partial aggregates).
+                partials = _assign_mean_partials(c, cent_list, "nv")
+            dims = partials.groupBy("cid", "pos").agg(
+                F.round(F.sum("psum") / F.sum("cnt"), 6).alias("m")
+            )
+            new_cv = _assemble_means(dims.collect(), key_cols=("cid",))
+            # empty clusters keep their previous centroid (the old left
+            # join's coalesce)
+            cent_list = [(cid, new_cv.get((cid,), cv)) for cid, cv in cent_list]
+    # the final `indexed` checkpoint is what consumers read; the scope
+    # frees the training relation's generation
     spark = c.sparkSession
     cents = spark.createDataFrame(
         [(cid, cv) for cid, cv in cent_list], "cid int, cv array<double>"
@@ -637,100 +638,100 @@ def pq_train_codebooks(
             )
         ).alias("e"),
     ).select("nid", F.col("e.s").alias("s"), F.col("e.sv").alias("sv"))
-    # loop-invariant training relation: checkpoint once (see
-    # ivf_build_index) — each joint-Lloyd iteration re-reads the
-    # exploded (nid, s, subvector) frame through mapInPandas
-    sub = ckpt_reset_stats(sub)
+    with Generations("pq_train_codebooks") as g:
+        # loop-invariant training relation: checkpoint once (see
+        # ivf_build_index) — each joint-Lloyd iteration re-reads the
+        # exploded (nid, s, subvector) frame through mapInPandas
+        sub = g.ckpt(sub)
 
-    # r14: codebook state lives DRIVER-SIDE between iterations (see
-    # ivf_build_index — the m·k codebook rows are index metadata). Each
-    # iteration's ONLY action is the M-step collect; the dict merge
-    # replicates the old left-join + coalesce (empty codes keep their
-    # centroid) exactly, and the Spark-side assignment / round(avg, 6)
-    # arithmetic is unchanged.
-    init_rows = (
-        sub.where(
-            F.col("nid").isin(
-                [r["nid"] for r in c.select("nid").orderBy("nid").limit(n_codes).collect()]
+        # r14: codebook state lives DRIVER-SIDE between iterations (see
+        # ivf_build_index — the m·k codebook rows are index metadata). Each
+        # iteration's ONLY action is the M-step collect; the dict merge
+        # replicates the old left-join + coalesce (empty codes keep their
+        # centroid) exactly, and the Spark-side assignment / round(avg, 6)
+        # arithmetic is unchanged.
+        init_rows = (
+            sub.where(
+                F.col("nid").isin(
+                    [r["nid"] for r in c.select("nid").orderBy("nid").limit(n_codes).collect()]
+                )
             )
+            .select("nid", "s", "sv")
+            .collect()
         )
-        .select("nid", "s", "sv")
-        .collect()
-    )
-    id_rank = {nid: i for i, nid in enumerate(sorted({r["nid"] for r in init_rows}))}
-    book = {
-        (r["s"], id_rank[r["nid"]]): list(r["sv"]) for r in init_rows
-    }
+        id_rank = {nid: i for i, nid in enumerate(sorted({r["nid"] for r in init_rows}))}
+        book = {
+            (r["s"], id_rank[r["nid"]]): list(r["sv"]) for r in init_rows
+        }
 
-    def _book_rows():
-        return [(s, code, cv) for (s, code), cv in sorted(book.items())]
+        def _book_rows():
+            return [(s, code, cv) for (s, code), cv in sorted(book.items())]
 
-    for _ in range(n_iters):
-        mats = [
-            np.asarray(
-                [cv for (s2, _), cv in sorted(book.items()) if s2 == s],
-                dtype=np.float64,
-            )
-            for s in range(m)
-        ]
+        for _ in range(n_iters):
+            mats = [
+                np.asarray(
+                    [cv for (s2, _), cv in sorted(book.items()) if s2 == s],
+                    dtype=np.float64,
+                )
+                for s in range(m)
+            ]
 
-        # FUSED E+M step (r14, see _assign_mean_partials): the same
-        # Arrow pass that argmins each (s, subvector) batch also reduces
-        # it to per-(s, code, pos) partial sums — m·n_codes·subdim rows
-        # per batch instead of the sample·subdim posexplode through the
-        # shuffle. Assignment arithmetic is unchanged (same d² matmul,
-        # first-minimum argmin); the mean becomes round(Σ psum / Σ cnt,
-        # 6), the same double-accumulation class round-6 absorbs.
-        def _partials(it):
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                svs = np.vstack(pdf["sv"].to_numpy())
-                subd = svs.shape[1]
-                frames = []
-                for s in range(m):
-                    mask = (pdf["s"] == s).to_numpy()
-                    if not mask.any():
+            # FUSED E+M step (r14, see _assign_mean_partials): the same
+            # Arrow pass that argmins each (s, subvector) batch also reduces
+            # it to per-(s, code, pos) partial sums — m·n_codes·subdim rows
+            # per batch instead of the sample·subdim posexplode through the
+            # shuffle. Assignment arithmetic is unchanged (same d² matmul,
+            # first-minimum argmin); the mean becomes round(Σ psum / Σ cnt,
+            # 6), the same double-accumulation class round-6 absorbs.
+            def _partials(it):
+                for pdf in it:
+                    if len(pdf) == 0:
                         continue
-                    v = svs[mask]
-                    cmat = mats[s]
-                    d2 = (
-                        (v * v).sum(axis=1)[:, None]
-                        - 2.0 * (v @ cmat.T)
-                        + (cmat * cmat).sum(axis=1)[None, :]
-                    )
-                    codes = np.argmin(d2, axis=1)  # first (lowest) code wins ties
-                    sums = np.zeros((cmat.shape[0], subd), dtype=np.float64)
-                    np.add.at(sums, codes, v)
-                    cnts = np.bincount(codes, minlength=cmat.shape[0])
-                    present = np.flatnonzero(cnts)
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "s": np.full(len(present) * subd, s, dtype=np.int32),
-                                "code": np.repeat(present, subd),
-                                "pos": np.tile(
-                                    np.arange(subd, dtype=np.int32), len(present)
-                                ),
-                                "cnt": np.repeat(cnts[present], subd),
-                                "psum": sums[present].ravel(),
-                            }
+                    svs = np.vstack(pdf["sv"].to_numpy())
+                    subd = svs.shape[1]
+                    frames = []
+                    for s in range(m):
+                        mask = (pdf["s"] == s).to_numpy()
+                        if not mask.any():
+                            continue
+                        v = svs[mask]
+                        cmat = mats[s]
+                        d2 = (
+                            (v * v).sum(axis=1)[:, None]
+                            - 2.0 * (v @ cmat.T)
+                            + (cmat * cmat).sum(axis=1)[None, :]
                         )
-                    )
-                if frames:
-                    yield pd.concat(frames, ignore_index=True)
+                        codes = np.argmin(d2, axis=1)  # first (lowest) code wins ties
+                        sums = np.zeros((cmat.shape[0], subd), dtype=np.float64)
+                        np.add.at(sums, codes, v)
+                        cnts = np.bincount(codes, minlength=cmat.shape[0])
+                        present = np.flatnonzero(cnts)
+                        frames.append(
+                            pd.DataFrame(
+                                {
+                                    "s": np.full(len(present) * subd, s, dtype=np.int32),
+                                    "code": np.repeat(present, subd),
+                                    "pos": np.tile(
+                                        np.arange(subd, dtype=np.int32), len(present)
+                                    ),
+                                    "cnt": np.repeat(cnts[present], subd),
+                                    "psum": sums[present].ravel(),
+                                }
+                            )
+                        )
+                    if frames:
+                        yield pd.concat(frames, ignore_index=True)
 
-        partials = sub.mapInPandas(
-            _partials, "s int, code long, pos int, cnt long, psum double"
-        )
-        dims = partials.groupBy("s", "code", "pos").agg(
-            F.round(F.sum("psum") / F.sum("cnt"), 6).alias("m")
-        )
-        new_cv = _assemble_means(dims.collect(), key_len=2)
-        # empty codes keep their previous centroid (the old left join's
-        # coalesce)
-        book = {key: new_cv.get(key, cv) for key, cv in book.items()}
-    ckpt_release(sub)
+            partials = sub.mapInPandas(
+                _partials, "s int, code long, pos int, cnt long, psum double"
+            )
+            dims = partials.groupBy("s", "code", "pos").agg(
+                F.round(F.sum("psum") / F.sum("cnt"), 6).alias("m")
+            )
+            new_cv = _assemble_means(dims.collect(), key_len=2)
+            # empty codes keep their previous centroid (the old left join's
+            # coalesce)
+            book = {key: new_cv.get(key, cv) for key, cv in book.items()}
     spark = corpus.sparkSession
     return spark.createDataFrame(_book_rows(), "s int, code int, cv array<double>")
 

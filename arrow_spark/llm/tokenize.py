@@ -18,7 +18,7 @@ instead of a driver-side sample:
   chosen merge — same driver-scalar pattern as Lloyd centroids in
   llm/similarity.py) + a map-only array fold applying the merge. State
   between iterations is the per-word symbol array; lineage is truncated
-  with localCheckpoint on a cadence, like operators/pagerank.py.
+  with a stats-reset checkpoint on a cadence, like operators/pagerank.py.
 - ``bpe_encode``: applies the learned merges in rank order as chained
   in-row folds — a single map-only projection (merges are literals), no
   shuffle, no iteration-to-iteration job boundary. Encoding distinct
@@ -43,6 +43,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..checkpoint import Generations
 
 #: Word pattern shared by Spark and the DuckDB oracles (both engines'
 #: regexp_extract_all agree on this class).
@@ -153,32 +155,42 @@ def bpe_train(
     Scale: per iteration, ONE shuffle (pair-count aggregation over the
     word table, map-side partials) and a 1-row TakeOrdered argmax to the
     driver; the merge application is a map-only fold. The iterated state
-    is vocabulary-sized, cached, and localCheckpoint'd every
-    ``checkpoint_every`` rounds so the plan does not accrete ``n_merges``
-    nested folds.
+    is vocabulary-sized and checkpointed every ``checkpoint_every``
+    rounds so the plan does not accrete ``n_merges`` nested folds; each
+    checkpoint frees the generation it supersedes.
     """
-    cur = words.select(
-        F.col(word_col).alias("word"),
-        F.col(count_col).cast("long").alias("wcount"),
-        _chars_expr(word_col).alias("syms"),
-    ).localCheckpoint()
     merges: list[dict] = []
-    for rank in range(1, n_merges + 1):
-        top = (
-            cur.select(F.explode(_adjacent_pairs(F.col("syms"))).alias("p"), "wcount")
-            .groupBy(F.col("p.lhs").alias("lhs"), F.col("p.rhs").alias("rhs"))
-            .agg(F.sum("wcount").alias("freq"))
-            .orderBy(F.desc("freq"), "lhs", "rhs")
-            .limit(1)
-            .collect()
+    with Generations("bpe_train") as g:
+        cur = g.ckpt(
+            words.select(
+                F.col(word_col).alias("word"),
+                F.col(count_col).cast("long").alias("wcount"),
+                _chars_expr(word_col).alias("syms"),
+            )
         )
-        if not top:
-            break
-        lhs, rhs, freq = top[0]["lhs"], top[0]["rhs"], top[0]["freq"]
-        merges.append({"rank": rank, "lhs": lhs, "rhs": rhs, "freq": int(freq)})
-        cur = cur.withColumn("syms", merge_pair(F.col("syms"), lhs, rhs))
-        if rank % checkpoint_every == 0 or rank == n_merges:
-            cur = cur.localCheckpoint()
+        gen = cur
+        for rank in range(1, n_merges + 1):
+            top = (
+                cur.select(F.explode(_adjacent_pairs(F.col("syms"))).alias("p"), "wcount")
+                .groupBy(F.col("p.lhs").alias("lhs"), F.col("p.rhs").alias("rhs"))
+                .agg(F.sum("wcount").alias("freq"))
+                .orderBy(F.desc("freq"), "lhs", "rhs")
+                .limit(1)
+                .collect()
+            )
+            if not top:
+                break
+            lhs, rhs, freq = top[0]["lhs"], top[0]["rhs"], top[0]["freq"]
+            merges.append({"rank": rank, "lhs": lhs, "rhs": rhs, "freq": int(freq)})
+            cur = cur.withColumn("syms", merge_pair(F.col("syms"), lhs, rhs))
+            if rank % checkpoint_every == 0 or rank == n_merges:
+                # the superseded generation is freed once this one has
+                # materialized (the checkpoint is eager)
+                cur = g.ckpt(cur)
+                g.release(gen)
+                gen = cur
+        # the returned symbols read the last generation
+        g.keep(gen)
     return merges, cur
 
 

@@ -36,7 +36,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..checkpoint import ckpt_reset_stats
+# ckpt_reset_stats is unused here; it stays imported because
+# perfbench/tests/test_trace.py checks that this module's binding of it
+# is wrapped by the tracer.
+from ..checkpoint import Generations, ckpt_reset_stats  # noqa: F401
 
 __all__ = ["undirected_edges", "k_core"]
 
@@ -68,12 +71,8 @@ def k_core(
     it like shortest_paths sizes its relaxation rounds (the fixpoint is
     reached once no vertex falls below k; extra rounds are no-ops but
     still cost a pass, so don't oversize it)."""
-    # Loop-carried edge frame: stats-reset checkpoint, not bare
-    # localCheckpoint — the per-round semi-joins would compound preserved
-    # origin-size estimates to BigInteger overflow at planning time (the
-    # CC-loop discovery, arrow_spark/checkpoint.py).
-    cur = ckpt_reset_stats(und)
-    for _ in range(rounds):
+
+    def step(cur: DataFrame, _: int) -> DataFrame:
         ends = cur.select(F.col("lo").alias("n")).unionAll(
             cur.select(F.col("hi").alias("n"))
         )
@@ -83,15 +82,16 @@ def k_core(
             .where(F.col("d") >= k)
             .select("n")
         )
-        nxt = (
-            cur.join(
-                F.broadcast(alive.withColumnRenamed("n", "lo")), "lo", "left_semi"
-            )
-            .join(
-                F.broadcast(alive.withColumnRenamed("n", "hi")), "hi", "left_semi"
-            )
-        )
-        cur = ckpt_reset_stats(nxt, release=cur)
+        return cur.join(
+            F.broadcast(alive.withColumnRenamed("n", "lo")), "lo", "left_semi"
+        ).join(F.broadcast(alive.withColumnRenamed("n", "hi")), "hi", "left_semi")
+
+    # Loop-carried edge frame: stats-reset checkpoint, not bare
+    # localCheckpoint — the per-round semi-joins would compound preserved
+    # origin-size estimates to BigInteger overflow at planning time (the
+    # CC-loop discovery, arrow_spark/checkpoint.py).
+    with Generations("k_core") as g:
+        cur = g.keep(g.iterate(g.ckpt(und), step, rounds))
     ends = cur.select(F.col("lo").alias("node")).unionAll(
         cur.select(F.col("hi").alias("node"))
     )

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..checkpoint import ckpt_reset_stats
+from ..checkpoint import Generations
 
 __all__ = ["edge_support", "k_truss"]
 
@@ -66,18 +66,18 @@ def k_truss(und: DataFrame, k: int, rounds: int = 3) -> DataFrame:
 
     ``rounds`` is a hard bound (oracle-replayable), not a convergence
     check — at the fixpoint further rounds are no-ops."""
+
+    def step(cur: DataFrame, _: int) -> DataFrame:
+        sup = edge_support(cur).where(F.col("support") >= k - 2)
+        return cur.join(sup.select("lo", "hi"), ["lo", "hi"], "left_semi")
+
     # Loop-carried edge frame: stats-reset checkpoint, not bare
     # localCheckpoint. k-truss is the WORST compounding shape of the
     # family — edge_support self-joins `cur` twice per round, so a
     # preserved origin estimate would CUBE every round until BigInteger
     # overflow at planning time (arrow_spark/checkpoint.py).
-    cur = ckpt_reset_stats(und)
-    for _ in range(rounds):
-        sup = edge_support(cur).where(F.col("support") >= k - 2)
-        cur = ckpt_reset_stats(
-            cur.join(sup.select("lo", "hi"), ["lo", "hi"], "left_semi"),
-            release=cur,
-        )
+    with Generations("k_truss") as g:
+        cur = g.keep(g.iterate(g.ckpt(und), step, rounds))
     return cur.join(edge_support(cur), ["lo", "hi"], "left").select(
         "lo", "hi", F.coalesce(F.col("support"), F.lit(0).cast("long")).alias("support")
     )

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from ..checkpoint import ckpt_release, ckpt_reset_stats
+from ..checkpoint import Generations
 
 __all__ = ["label_propagation"]
 
@@ -51,46 +51,48 @@ def label_propagation(
     und = e.unionByName(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"), "w")
     )
-    # Checkpoint the loop-invariant symmetrized edge frame ONCE (the
-    # CC-loop `sym` pattern): every round joins labels against it, so
-    # an unmaterialized edge lineage (event-scan + window + groupBy)
-    # would be recomputed per round. Stats-reset so the corpus-scale
-    # frame can never be elected a broadcast side.
-    und = ckpt_reset_stats(und)
-    # Loop-carried state goes through ckpt_reset_stats, not bare
-    # localCheckpoint: each round joins labels back against the edge
-    # frame, so preserved origin-size estimates compound multiplicatively
-    # until BigInteger overflow at planning time (proven in the CC loop
-    # at gen-sf3 — see arrow_spark/checkpoint.py). Generation 0 is a
-    # plain projection over the (persisted) und checkpoint; round 1
-    # materializes it inside its own checkpoint action (r14 — one fewer
-    # eager entry action).
-    labels = (
-        und.select(F.col("u").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-    )
     pick = W.partitionBy("node").orderBy(
         F.col("s").desc(), F.col("label").asc()
     )
-    for _ in range(n_iters):
-        votes = (
-            und.join(labels, und["v"] == labels["node"])
-            .select(F.col("u").alias("node"), "label", "w")
-            .groupBy("node", "label")
-            .agg(F.sum("w").alias("s"))
+    with Generations("label_propagation") as g:
+        # Checkpoint the loop-invariant symmetrized edge frame ONCE (the
+        # CC-loop `sym` pattern): every round joins labels against it, so
+        # an unmaterialized edge lineage (event-scan + window + groupBy)
+        # would be recomputed per round. Stats-reset so the corpus-scale
+        # frame can never be elected a broadcast side.
+        und = g.ckpt(und)
+
+        def step(labels: DataFrame, _: int) -> DataFrame:
+            votes = (
+                und.join(labels, und["v"] == labels["node"])
+                .select(F.col("u").alias("node"), "label", "w")
+                .groupBy("node", "label")
+                .agg(F.sum("w").alias("s"))
+            )
+            # r14: the winner frame already covers EVERY node, so the old
+            # labels⋈winner left join + coalesce was dead weight (one
+            # shuffle join per round for an impossible miss): nodes are
+            # defined by edges, und is symmetrized, and every neighbor is
+            # itself a node — so every node receives at least one vote.
+            return (
+                votes.withColumn("__rn__", F.row_number().over(pick))
+                .where(F.col("__rn__") == 1)
+                .select("node", "label")
+            )
+
+        # Loop-carried state goes through the stats-reset checkpoint, not
+        # bare localCheckpoint: each round joins labels back against the
+        # edge frame, so preserved origin-size estimates compound
+        # multiplicatively until BigInteger overflow at planning time
+        # (proven in the CC loop at gen-sf3 — see
+        # arrow_spark/checkpoint.py). Generation 0 is a plain projection
+        # over the (persisted) und checkpoint; round 1 materializes it
+        # inside its own checkpoint action (r14 — one fewer eager entry
+        # action).
+        labels = (
+            und.select(F.col("u").alias("node"))
+            .distinct()
+            .select("node", F.col("node").alias("label"))
         )
-        # r14: the winner frame already covers EVERY node, so the old
-        # labels⋈winner left join + coalesce was dead weight (one
-        # shuffle join per round for an impossible miss): nodes are
-        # defined by edges, und is symmetrized, and every neighbor is
-        # itself a node — so every node receives at least one vote.
-        labels = ckpt_reset_stats(
-            votes.withColumn("__rn__", F.row_number().over(pick))
-            .where(F.col("__rn__") == 1)
-            .select("node", "label"),
-            release=labels,
-        )
-    # the returned frame reads only the final labels generation
-    ckpt_release(und)
-    return labels
+        # the returned frame reads only the final labels generation
+        return g.keep(g.iterate(labels, step, n_iters))

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..checkpoint import ckpt_release, ckpt_reset_stats
+from ..checkpoint import Generations
 
 __all__ = ["pagerank", "transition_edges"]
 
@@ -73,79 +73,7 @@ def pagerank(
     redistributed uniformly each round, so Σ rank stays 1 up to the
     1e-9 snapping.
     """
-    e = edges.select(
-        F.col(src).alias("src"),
-        F.col(dst).alias("dst"),
-        (F.col(weight) if weight else F.lit(1)).cast("double").alias("w"),
-    )
-    # Checkpoint the loop-invariant edge frame ONCE (the CC-loop `sym`
-    # pattern) WITH the out-weight invariant pre-folded in (r14): the
-    # r13 shape materialized a separate `outw` frame and re-joined it
-    # every round — one extra shuffle + join per iteration for values
-    # that never change. Carrying `ow` as an edge column keeps the
-    # per-row arithmetic (r * w / ow over identical w, ow values)
-    # byte-identical while the contribution step becomes a single
-    # edges⋈ranks join. Stats-reset (not bare) so the corpus-scale edge
-    # frame can never be elected a broadcast side.
-    outw = e.groupBy("src").agg(F.sum("w").alias("ow"))
-    e = ckpt_reset_stats(e.join(outw, "src"))
-    # Node set with a has_out flag (r14): dangling mass was an
-    # anti-join of ranks against a separate source-set frame every
-    # round; the flag rides inside the loop-carried rank frame instead,
-    # so the round's dangling aggregate is a filtered sum over the
-    # already-persisted ranks — no join, no second frame.
-    nodes = ckpt_reset_stats(
-        e.select(F.col("src").alias("n"), F.lit(1).alias("has_out"))
-        .union(e.select(F.col("dst").alias("n"), F.lit(0).alias("has_out")))
-        .groupBy("n")
-        .agg(F.max("has_out").alias("has_out"))
-    )
-    # N as a driver-side literal (r14): the node count is loop-invariant
-    # scalar metadata; the old shape paid a crossJoin(broadcast(cnt))
-    # per round. 1.0/N, (1-d)/N and d/N below are the same IEEE double
-    # operations the old column divisions performed.
-    n_nodes = nodes.count()
-
-    # Loop-carried state goes through ckpt_reset_stats, not bare
-    # localCheckpoint: the per-round plan joins ranks back into itself,
-    # so preserved origin-size estimates would compound multiplicatively
-    # until BigInteger overflow at planning time (proven in the CC loop
-    # at gen-sf3 round ~25 — see arrow_spark/checkpoint.py). Generation
-    # 0 is a plain projection over the `nodes` checkpoint — the first
-    # round materializes it inside its own checkpoint action.
-    ranks = nodes.select("n", "has_out", F.lit(1.0 / n_nodes).alias("r"))
-
-    for _ in range(max(1, n_iters)):
-        contrib = (
-            e.join(ranks, e.src == ranks.n)
-            .groupBy("dst")
-            .agg(F.sum(F.col("r") * F.col("w") / F.col("ow")).alias("s"))
-        )
-        dang = (
-            ranks.where(F.col("has_out") == 0)
-            .agg(F.coalesce(F.sum("r"), F.lit(0.0)).alias("d"))
-        )
-        nxt = (
-            ranks.crossJoin(F.broadcast(dang))
-            .join(contrib, ranks.n == contrib.dst, "left")
-            .select(
-                "n",
-                "has_out",
-                _snap9(
-                    F.lit((1 - damping) / n_nodes)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("s"), F.lit(0.0))
-                        + F.col("d") / F.lit(float(n_nodes))
-                    )
-                ).alias("r"),
-            )
-        )
-        ranks = ckpt_reset_stats(nxt, release=ranks)
-    # the returned frame reads only the final ranks generation
-    ckpt_release(e)
-    ckpt_release(nodes)
-    return ranks.select(F.col("n").alias("node"), F.col("r").alias("rank"))
+    return _walk("pagerank", edges, None, n_iters, damping, src, dst, weight)
 
 
 def personalized_pagerank(
@@ -170,77 +98,110 @@ def personalized_pagerank(
     cuts — is the pagerank machinery unchanged. Seeds are broadcast
     (seed sets are query-sized, not graph-sized).
     """
+    return _walk(
+        "personalized_pagerank", edges, sources, n_iters, damping, src, dst, weight
+    )
+
+
+def _walk(
+    name: str,
+    edges: DataFrame,
+    sources: DataFrame | None,
+    n_iters: int,
+    damping: float,
+    src: str,
+    dst: str,
+    weight: str | None,
+) -> DataFrame:
+    """The random walk behind both PageRanks. Teleport, restart and
+    dangling mass go to every node in proportion to ``tele/N``: with no
+    ``sources`` tele is 1 and N the node count; otherwise tele is the
+    node's seed flag ``in_s`` and N the seed count."""
     e = edges.select(
         F.col(src).alias("src"),
         F.col(dst).alias("dst"),
         (F.col(weight) if weight else F.lit(1)).cast("double").alias("w"),
     )
-    # loop-invariant edge frame with the out-weight pre-folded in, and
-    # the node frame carrying BOTH per-node flags the round needs
-    # (in_s for teleport/restart mass, has_out for dangling mass) — see
-    # pagerank above: no per-round outw join, no per-round anti-join,
-    # no per-round seed-count broadcast.
-    outw = e.groupBy("src").agg(F.sum("w").alias("ow"))
-    e = ckpt_reset_stats(e.join(outw, "src"))
-    s = sources.select(F.col(sources.columns[0]).alias("n")).distinct()
-    nodes = ckpt_reset_stats(
-        e.select(F.col("src").alias("n"), F.lit(1).alias("has_out"))
-        .union(e.select(F.col("dst").alias("n"), F.lit(0).alias("has_out")))
-        .groupBy("n")
-        .agg(F.max("has_out").alias("has_out"))
-        .join(F.broadcast(s.withColumn("__in_s__", F.lit(1))), "n", "left")
-        .select(
-            "n",
-            "has_out",
-            F.coalesce(F.col("__in_s__"), F.lit(0)).alias("in_s"),
+    with Generations(name) as g:
+        # Checkpoint the loop-invariant edge frame ONCE (the CC-loop `sym`
+        # pattern) WITH the out-weight invariant pre-folded in (r14): the
+        # r13 shape materialized a separate `outw` frame and re-joined it
+        # every round — one extra shuffle + join per iteration for values
+        # that never change. Carrying `ow` as an edge column keeps the
+        # per-row arithmetic (r * w / ow over identical w, ow values)
+        # byte-identical while the contribution step becomes a single
+        # edges⋈ranks join. Stats-reset (not bare) so the corpus-scale edge
+        # frame can never be elected a broadcast side.
+        outw = e.groupBy("src").agg(F.sum("w").alias("ow"))
+        e = g.ckpt(e.join(outw, "src"))
+        # Node set with a has_out flag (r14): dangling mass was an
+        # anti-join of ranks against a separate source-set frame every
+        # round; the flag rides inside the loop-carried rank frame instead,
+        # so the round's dangling aggregate is a filtered sum over the
+        # already-persisted ranks — no join, no second frame.
+        nodes = (
+            e.select(F.col("src").alias("n"), F.lit(1).alias("has_out"))
+            .union(e.select(F.col("dst").alias("n"), F.lit(0).alias("has_out")))
+            .groupBy("n")
+            .agg(F.max("has_out").alias("has_out"))
         )
-    )
-    # seed count as a driver-side literal (seed sets are query-sized);
-    # in_s/sc below is the same IEEE double division the old
-    # crossJoin(broadcast(scnt)) column form performed
-    n_seeds = s.count()
-
-    # loop-carried → stats-reset checkpoint (see pagerank above);
-    # generation 0 is a projection over the nodes checkpoint
-    ranks = nodes.select(
-        "n",
-        "has_out",
-        "in_s",
-        (F.col("in_s").cast("double") / F.lit(float(n_seeds))).alias("r"),
-    )
-
-    for _ in range(max(1, n_iters)):
-        contrib = (
-            e.join(ranks, e.src == ranks.n)
-            .groupBy("dst")
-            .agg(F.sum(F.col("r") * F.col("w") / F.col("ow")).alias("cs"))
-        )
-        dang = (
-            ranks.where(F.col("has_out") == 0)
-            .agg(F.coalesce(F.sum("r"), F.lit(0.0)).alias("d"))
-        )
-        nxt = (
-            ranks.crossJoin(F.broadcast(dang))
-            .join(contrib, ranks.n == contrib.dst, "left")
-            .select(
-                "n",
-                "has_out",
-                "in_s",
-                _snap9(
-                    (1 - F.lit(damping))
-                    * F.col("in_s").cast("double") / F.lit(float(n_seeds))
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("cs"), F.lit(0.0))
-                        + F.col("d") * F.col("in_s").cast("double")
-                        / F.lit(float(n_seeds))
-                    )
-                ).alias("r"),
+        carry = ["n", "has_out"]
+        # N as a driver-side literal (r14): the node (or seed) count is
+        # loop-invariant scalar metadata; the old shape paid a
+        # crossJoin(broadcast(cnt)) per round. tele/N below is the same
+        # IEEE double division the old column form performed.
+        if sources is None:
+            nodes = g.ckpt(nodes)
+            count = nodes.count()
+            tele = F.lit(1.0)
+        else:
+            s = sources.select(F.col(sources.columns[0]).alias("n")).distinct()
+            nodes = g.ckpt(
+                nodes.join(
+                    F.broadcast(s.withColumn("__in_s__", F.lit(1))), "n", "left"
+                ).select(
+                    *carry, F.coalesce(F.col("__in_s__"), F.lit(0)).alias("in_s")
+                )
             )
-        )
-        ranks = ckpt_reset_stats(nxt, release=ranks)
-    ckpt_release(e)
-    ckpt_release(nodes)
+            count = s.count()
+            tele = F.col("in_s").cast("double")
+            carry.append("in_s")
+        n = F.lit(float(count))
+
+        def step(ranks: DataFrame, _: int) -> DataFrame:
+            contrib = (
+                e.join(ranks, e.src == ranks.n)
+                .groupBy("dst")
+                .agg(F.sum(F.col("r") * F.col("w") / F.col("ow")).alias("s"))
+            )
+            dang = (
+                ranks.where(F.col("has_out") == 0)
+                .agg(F.coalesce(F.sum("r"), F.lit(0.0)).alias("d"))
+            )
+            return (
+                ranks.crossJoin(F.broadcast(dang))
+                .join(contrib, ranks.n == contrib.dst, "left")
+                .select(
+                    *carry,
+                    _snap9(
+                        (1 - F.lit(damping)) * tele / n
+                        + F.lit(damping)
+                        * (F.coalesce(F.col("s"), F.lit(0.0)) + F.col("d") * tele / n)
+                    ).alias("r"),
+                )
+            )
+
+        # Loop-carried state goes through the stats-reset checkpoint, not
+        # bare localCheckpoint: the per-round plan joins ranks back into
+        # itself, so preserved origin-size estimates would compound
+        # multiplicatively until BigInteger overflow at planning time
+        # (proven in the CC loop at gen-sf3 round ~25 — see
+        # arrow_spark/checkpoint.py). Generation 0 is a plain projection
+        # over the `nodes` checkpoint — the first round materializes it
+        # inside its own checkpoint action.
+        ranks = nodes.select(*carry, (tele / n).alias("r"))
+        # the returned frame reads only the final ranks generation
+        ranks = g.keep(g.iterate(ranks, step, max(1, n_iters)))
     return ranks.select(F.col("n").alias("node"), F.col("r").alias("rank"))
 
 
@@ -267,71 +228,64 @@ def hits(
     Returns (node, authority, hub).
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    # loop-invariant edge frame: checkpoint once (see pagerank above) —
-    # HITS re-joins it twice per round (authority and hub half-steps)
-    e = ckpt_reset_stats(e)
-    nodes = ckpt_reset_stats(
-        e.select(F.col("src").alias("n"))
-        .union(e.select(F.col("dst").alias("n")))
-        .distinct()
-    )
-    # N as a driver-side literal (r14, see pagerank): 1.0/N is the same
-    # IEEE double division the old crossJoin(broadcast(cnt)) performed
-    n_nodes = nodes.count()
-    # loop-carried → stats-reset checkpoint (see pagerank above);
-    # generation 0 is a projection over the nodes checkpoint
-    scores = nodes.select(
-        "n",
-        F.lit(1.0 / n_nodes).alias("a"),
-        F.lit(1.0 / n_nodes).alias("h"),
-    )
-
-    def _norm(df: DataFrame, col: str) -> DataFrame:
-        tot = df.agg(F.sum(col).alias("__t__"))
-        return df.crossJoin(F.broadcast(tot)).select(
+    with Generations("hits") as g:
+        # loop-invariant edge frame: checkpoint once (see _walk) — HITS
+        # re-joins it twice per round (authority and hub half-steps)
+        e = g.ckpt(e)
+        nodes = g.ckpt(
+            e.select(F.col("src").alias("n"))
+            .union(e.select(F.col("dst").alias("n")))
+            .distinct()
+        )
+        # N as a driver-side literal (r14, see _walk): 1.0/N is the same
+        # IEEE double division the old crossJoin(broadcast(cnt)) performed
+        n_nodes = nodes.count()
+        # loop-carried → stats-reset checkpoint (see _walk); generation 0
+        # is a projection over the nodes checkpoint
+        scores = nodes.select(
             "n",
-            *[c for c in ("a", "h") if c != col],
-            F.when(
-                F.col("__t__") > 0, _snap9(F.col(col) / F.col("__t__"))
-            ).otherwise(F.lit(0.0)).alias(col),
-        ).select("n", "a", "h")
+            F.lit(1.0 / n_nodes).alias("a"),
+            F.lit(1.0 / n_nodes).alias("h"),
+        )
 
-    for _ in range(max(1, n_iters)):
-        # r14: the loop-carried score frame IS the node universe (one
-        # row per node, invariant), so each half-step left-joins the new
-        # raw scores straight onto it — the r13 shape paid two joins per
-        # half-step (nodes⋈new, then ⋈scores to re-attach the other
-        # column).
-        a_new = (
-            e.join(scores, e.src == scores.n)
-            .groupBy("dst")
-            .agg(_snap9(F.sum("h")).alias("a_raw"))
-        )
-        nxt = (
-            scores.join(a_new, scores.n == a_new.dst, "left")
-            .select(
+        def _norm(df: DataFrame, col: str) -> DataFrame:
+            tot = df.agg(F.sum(col).alias("__t__"))
+            return df.crossJoin(F.broadcast(tot)).select(
                 "n",
-                F.coalesce(F.col("a_raw"), F.lit(0.0)).alias("a"),
-                "h",
+                *[c for c in ("a", "h") if c != col],
+                F.when(
+                    F.col("__t__") > 0, _snap9(F.col(col) / F.col("__t__"))
+                ).otherwise(F.lit(0.0)).alias(col),
+            ).select("n", "a", "h")
+
+        def half_step(scores: DataFrame, i: int) -> DataFrame:
+            # r14: the loop-carried score frame IS the node universe (one
+            # row per node, invariant), so each half-step left-joins the
+            # new raw scores straight onto it — the r13 shape paid two
+            # joins per half-step (nodes⋈new, then ⋈scores to re-attach
+            # the other column). Even half-steps update authorities, odd
+            # ones hubs, each checkpointed on its own.
+            if i % 2 == 0:
+                a_new = (
+                    e.join(scores, e.src == scores.n)
+                    .groupBy("dst")
+                    .agg(_snap9(F.sum("h")).alias("a_raw"))
+                )
+                nxt = scores.join(a_new, scores.n == a_new.dst, "left").select(
+                    "n", F.coalesce(F.col("a_raw"), F.lit(0.0)).alias("a"), "h"
+                )
+                return _norm(nxt, "a")
+            h_new = (
+                e.join(scores.select(F.col("n").alias("dn"), "a"), e.dst == F.col("dn"))
+                .groupBy("src")
+                .agg(_snap9(F.sum("a")).alias("h_raw"))
             )
-        )
-        scores = ckpt_reset_stats(_norm(nxt, "a"), release=scores)
-        h_new = (
-            e.join(scores.select(F.col("n").alias("dn"), "a"), e.dst == F.col("dn"))
-            .groupBy("src")
-            .agg(_snap9(F.sum("a")).alias("h_raw"))
-        )
-        nxt = (
-            scores.join(h_new, scores.n == h_new.src, "left")
-            .select(
-                "n",
-                "a",
-                F.coalesce(F.col("h_raw"), F.lit(0.0)).alias("h"),
+            nxt = scores.join(h_new, scores.n == h_new.src, "left").select(
+                "n", "a", F.coalesce(F.col("h_raw"), F.lit(0.0)).alias("h")
             )
-        )
-        scores = ckpt_reset_stats(_norm(nxt, "h"), release=scores)
-    ckpt_release(e)
-    ckpt_release(nodes)
+            return _norm(nxt, "h")
+
+        scores = g.keep(g.iterate(scores, half_step, 2 * max(1, n_iters)))
     return scores.select(
         F.col("n").alias("node"),
         F.col("a").alias("authority"),

@@ -130,9 +130,8 @@ def dbscan(
     ``max_iter`` caps the CC rounds, counting the round that stops it;
     it raises ``RuntimeError`` when the core graph needs more.
     """
+    from arrow_spark.checkpoint import Generations
     from arrow_spark.llm.dedup import connected_components
-
-    from arrow_spark.checkpoint import ckpt_reset_stats
 
     pts = points.select(
         F.col(id_col).alias("id"),
@@ -140,27 +139,30 @@ def dbscan(
         F.col(y_col).cast("long").alias("y"),
     )
     pairs = radius_join(pts, pts, "id", "id", x_col="x", y_col="y", radius=eps)
-    # The ε-neighborhood frame feeds THREE consumers (degree count, the
-    # core-edge filter into CC, border assignment) — materialize the
-    # 9-cell-explode self-join once instead of recomputing it per
-    # consumer. Stats-reset so the density-scale pair frame is never
-    # broadcast-elected; stays persisted until the caller's action ends
-    # (the output plan reads it).
-    pairs = ckpt_reset_stats(pairs)
-    deg = pairs.groupBy("lid").agg(F.count(F.lit(1)).cast("long").alias("sz"))
-    core = deg.where(F.col("sz") >= min_pts).select(F.col("lid").alias("id"))
-    core_edges = (
-        pairs.where(F.col("lid") < F.col("rid"))
-        .join(core.withColumnRenamed("id", "lid").hint("merge"), "lid", "left_semi")
-        .join(core.withColumnRenamed("id", "rid").hint("merge"), "rid", "left_semi")
-    )
-    cc = connected_components(core_edges, "lid", "rid", max_iter=max_iter)
-    core_lbl = core.join(
-        cc.withColumnRenamed("v", "id"), "id", "left"
-    ).select("id", F.coalesce(F.col("component"), F.col("id")).alias("cluster"))
-    # consumed twice (border assignment + final output join): materialize
-    # the node-scale label frame once
-    core_lbl = ckpt_reset_stats(core_lbl)
+    with Generations("dbscan") as g:
+        # The ε-neighborhood frame feeds THREE consumers (degree count,
+        # the core-edge filter into CC, border assignment) — materialize
+        # the 9-cell-explode self-join once instead of recomputing it per
+        # consumer. Stats-reset so the density-scale pair frame is never
+        # broadcast-elected. Freed if CC raises; otherwise it stays
+        # persisted until the caller's action ends (the output plan
+        # reads it).
+        pairs = g.ckpt(pairs)
+        deg = pairs.groupBy("lid").agg(F.count(F.lit(1)).cast("long").alias("sz"))
+        core = deg.where(F.col("sz") >= min_pts).select(F.col("lid").alias("id"))
+        core_edges = (
+            pairs.where(F.col("lid") < F.col("rid"))
+            .join(core.withColumnRenamed("id", "lid").hint("merge"), "lid", "left_semi")
+            .join(core.withColumnRenamed("id", "rid").hint("merge"), "rid", "left_semi")
+        )
+        cc = connected_components(core_edges, "lid", "rid", max_iter=max_iter)
+        core_lbl = core.join(
+            cc.withColumnRenamed("v", "id"), "id", "left"
+        ).select("id", F.coalesce(F.col("component"), F.col("id")).alias("cluster"))
+        # consumed twice (border assignment + final output join):
+        # materialize the node-scale label frame once
+        core_lbl = g.keep(g.ckpt(core_lbl))
+        g.keep(pairs)
     border_lbl = (
         pairs.join(core.withColumnRenamed("id", "lid").hint("merge"), "lid", "left_anti")
         .join(

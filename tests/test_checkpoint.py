@@ -23,7 +23,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from arrow_spark.checkpoint import ckpt_reset_stats
+from arrow_spark.checkpoint import Generations, ckpt_release, ckpt_reset_stats
 from arrow_spark.operators.pagerank import pagerank
 
 LONG_MAX = (1 << 63) - 1
@@ -137,22 +137,19 @@ def test_release_frees_generation_and_keeps_values(spark):
     """r13 (E=30M CC OOM): generations accumulate unless released. A
     release must free the block while the SUCCESSOR generation — built
     from the released one — stays correct."""
-    from arrow_spark.checkpoint import ckpt_release
-
     base = _n_persistent(spark)
     g1 = ckpt_reset_stats(
         spark.range(1000).select(F.col("id").alias("v"), F.lit(1).cast("long").alias("x"))
     )
-    g2 = ckpt_reset_stats(_self_join_round(g1), release=g1)
+    g2 = ckpt_reset_stats(_self_join_round(g1))
+    assert ckpt_release(g1) is True
     assert _n_persistent(spark) == base + 1  # g1's block gone, g2's live
     assert g1._ckpt_src is None
     assert g2.agg(F.sum("x")).collect()[0][0] == 2000
     # releasing a frame this module didn't produce is a no-op
-    from arrow_spark.checkpoint import ckpt_release as rel
-
-    assert rel(spark.range(3)) is False
-    assert rel(g1) is False  # already released
-    assert rel(g2) is True
+    assert ckpt_release(spark.range(3)) is False
+    assert ckpt_release(g1) is False  # already released
+    assert ckpt_release(g2) is True
     assert _n_persistent(spark) == base
 
 
@@ -160,8 +157,6 @@ def test_generations_persist_serialized(spark):
     """Default storage must be the SERIALIZED memory+disk level: the
     deserialized unroll across all executor threads at once is where
     the 30M-edge CC sweep OOM'd (MemoryStore.putIteratorAsValues)."""
-    from arrow_spark.checkpoint import ckpt_release
-
     g = ckpt_reset_stats(spark.range(10).select(F.col("id").alias("v")))
     desc = g._ckpt_src._jdf.queryExecution().analyzed().rdd().getStorageLevel().description()
     assert "Serialized" in desc and "Disk" in desc, desc
@@ -169,16 +164,132 @@ def test_generations_persist_serialized(spark):
 
 
 def test_loop_holds_one_generation(spark):
-    """The documented loop shape must hold exactly one persisted
-    generation regardless of round count."""
-    from arrow_spark.checkpoint import ckpt_release
+    """Generations.iterate holds exactly one persisted generation
+    between rounds, whatever the round count; the scope frees it on
+    exit unless it is kept."""
+    base = _n_persistent(spark)
+    live = []
+
+    def step(state, _):
+        live.append(_n_persistent(spark) - base)
+        return _self_join_round(state)
+
+    with Generations("loop") as g:
+        seed = spark.range(200).select(
+            F.col("id").alias("v"), F.lit(1).cast("long").alias("x")
+        )
+        state = g.iterate(g.ckpt(seed), step, 6)
+        assert _n_persistent(spark) == base + 1
+        assert state.agg(F.sum("x")).collect()[0][0] == 200 * 2**6
+    assert live == [1] * 6
+    assert _n_persistent(spark) == base
+
+
+def test_generations_keep_outlives_the_scope(spark):
+    base = _n_persistent(spark)
+    with Generations("keep") as g:
+        g.ckpt(spark.range(10))
+        kept = g.keep(g.ckpt(spark.range(20)))
+    assert _n_persistent(spark) == base + 1
+    assert kept.count() == 20
+    assert ckpt_release(kept) is True
+    assert _n_persistent(spark) == base
+
+
+def test_generations_free_everything_on_exception(spark):
+    base = _n_persistent(spark)
+
+    def step(state, i):
+        if i == 2:
+            raise ValueError("boom")
+        return _self_join_round(state)
+
+    seed = spark.range(50).select(F.col("id").alias("v"), F.lit(1).cast("long").alias("x"))
+    with pytest.raises(ValueError, match="boom"):
+        with Generations("fail") as g:
+            g.ckpt(spark.range(5))
+            g.iterate(g.ckpt(seed), step, 5)
+    assert _n_persistent(spark) == base
+
+
+def test_iterate_until_stops_lazily_or_raises_naming_the_operator(spark):
+    """With ``until``, each round's checkpoint is lazy and ``until`` is
+    its one action: the loop stops at the first true round, or raises
+    a RuntimeError that names the operator and frees every generation."""
+    seed = spark.range(8).select(F.col("id").alias("v"))
+
+    def halve(state, _):
+        return state.where(F.col("v") % 2 == 0).select((F.col("v") / 2).cast("long").alias("v"))
 
     base = _n_persistent(spark)
-    state = ckpt_reset_stats(
-        spark.range(200).select(F.col("id").alias("v"), F.lit(1).cast("long").alias("x"))
-    )
-    for _ in range(6):
-        state = ckpt_reset_stats(_self_join_round(state), release=state)
-        assert _n_persistent(spark) == base + 1
-    ckpt_release(state)
+    rounds = []
+
+    def one_left(new):
+        rounds.append(1)
+        return new.count() == 1
+
+    with Generations("halve") as g:
+        out = g.keep(g.iterate(seed, halve, 10, until=one_left))
+    # 0..7 → {0,1,2,3} → {0,1} → {0}: three rounds
+    assert len(rounds) == 3
+    assert [r["v"] for r in out.collect()] == [0]
+    assert ckpt_release(out) is True
     assert _n_persistent(spark) == base
+
+    with pytest.raises(RuntimeError, match="halve did not converge in 2 rounds"):
+        with Generations("halve") as g:
+            g.iterate(seed, halve, 2, until=lambda new: new.count() == 1)
+    assert _n_persistent(spark) == base
+
+
+def _loops():
+    from arrow_spark.llm.dedup import connected_components
+    from arrow_spark.operators.kcore import k_core, undirected_edges
+    from arrow_spark.operators.ktruss import k_truss
+    from arrow_spark.operators.labelprop import label_propagation
+    from arrow_spark.operators.pagerank import hits, personalized_pagerank
+    from arrow_spark.operators.shortest_paths import shortest_paths
+
+    def und(e):
+        return undirected_edges(e, "src", "dst")
+
+    return {
+        "pagerank": lambda e, s: pagerank(e, n_iters=3),
+        "personalized_pagerank": lambda e, s: personalized_pagerank(e, s, n_iters=3),
+        "hits": lambda e, s: hits(e, n_iters=2),
+        "label_propagation": lambda e, s: label_propagation(e, n_iters=3),
+        "shortest_paths": lambda e, s: shortest_paths(e, s.select(F.col("n").alias("node"))),
+        "k_core": lambda e, s: k_core(und(e), k=2, rounds=3),
+        "k_truss": lambda e, s: k_truss(und(e), k=3, rounds=3),
+        "connected_components": lambda e, s: connected_components(e, "src", "dst"),
+    }
+
+
+@pytest.mark.parametrize("op", sorted(_loops()))
+def test_failing_loop_frees_every_generation(spark, monkeypatch, op):
+    """Whatever fails inside a loop, the operator's scope releases every
+    generation it persisted: here the third checkpoint call (a round
+    past the loop invariants) raises."""
+    import arrow_spark.checkpoint as ckpt
+
+    real = ckpt.ckpt_reset_stats
+    calls = []
+
+    def third_call_fails(df, eager=True):
+        calls.append(1)
+        if len(calls) == 3:
+            raise RuntimeError("injected checkpoint failure")
+        return real(df, eager=eager)
+
+    # a 9-vertex chain with two chords: every loop needs several rounds
+    edges = spark.createDataFrame(
+        [(i, i + 1, 1) for i in range(8)] + [(0, 2, 1), (5, 7, 2)],
+        "src long, dst long, w long",
+    )
+    seeds = spark.createDataFrame([(0,)], "n long")
+    before = _n_persistent(spark)
+    monkeypatch.setattr(ckpt, "ckpt_reset_stats", third_call_fails)
+    with pytest.raises(RuntimeError, match="injected checkpoint failure"):
+        _loops()[op](edges, seeds)
+    assert len(calls) == 3
+    assert _n_persistent(spark) <= before

@@ -241,16 +241,17 @@ def test_connected_components_star_forest_input_stops_after_one_round(
     # A star forest is a fixpoint of one round, and the star-forest test
     # recognizes it in that round: three generations (input, the one
     # round, output), with no confirmation round.
+    import arrow_spark.checkpoint as ckpt
     import arrow_spark.llm.dedup as dedup
 
     calls = []
-    real = dedup.ckpt_reset_stats
+    real = ckpt.ckpt_reset_stats
 
     def counting(*args, **kwargs):
         calls.append(1)
         return real(*args, **kwargs)
 
-    monkeypatch.setattr(dedup, "ckpt_reset_stats", counting)
+    monkeypatch.setattr(ckpt, "ckpt_reset_stats", counting)
     edges = spark.createDataFrame(
         [(1, 2), (1, 3), (1, 4), (7, 8)], "id_a long, id_b long"
     )
@@ -366,6 +367,20 @@ def test_ivf_centroids_deterministic(spark):
     a = {r.cid: r.cv for r in ivf_train_centroids(df, n_clusters=4, n_iters=3).collect()}
     b = {r.cid: r.cv for r in ivf_train_centroids(df, n_clusters=4, n_iters=3).collect()}
     assert a == b and len(a) == 4
+
+
+def test_ivf_centroids_frees_the_inverted_file(spark):
+    # the centroids come from driver lists, so no persisted generation
+    # (training relation or inverted file) outlives the call
+    from arrow_spark.llm.similarity import ivf_train_centroids
+
+    df = spark.createDataFrame(
+        _clustered_vectors(), "vec_id long, embedding array<double>, label int"
+    )
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    assert ivf_train_centroids(df, n_clusters=4, n_iters=2).count() == 4
+    assert persistent().size() <= before
 
 
 def test_ivf_topk_recall_vs_brute_force(spark):

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import random
 
+import pytest
+
 from arrow_spark.operators.spatial import radius_join
 
 
@@ -97,6 +99,21 @@ def test_dbscan_chain_merges_through_cores(spark):
     clusters = {c for role, c in got.values() if role == "core"}
     assert clusters == {2}
     assert got[1] == ("border", 2) and got[7] == ("border", 2)
+
+
+def test_dbscan_failing_components_frees_pairs(spark):
+    # a 30-point chain of cores cannot close in one CC round: dbscan
+    # raises and frees its persisted neighbor pairs on the way out
+    from arrow_spark.operators.spatial import dbscan
+
+    df = spark.createDataFrame(
+        [(i, 10 * i, 0) for i in range(30)], "id long, x long, y long"
+    )
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        dbscan(df, "id", eps=12, min_pts=3, max_iter=1)
+    assert persistent().size() <= before
 
 
 def test_dbscan_singleton_core_cluster_is_own_id(spark):
