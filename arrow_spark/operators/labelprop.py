@@ -94,5 +94,7 @@ def label_propagation(
             .distinct()
             .select("node", F.col("node").alias("label"))
         )
-        # the returned frame reads only the final labels generation
+        if n_iters <= 0:
+            g.keep(und)  # no round runs: the result is a projection over und
+        # otherwise it reads only the final labels generation
         return g.keep(g.iterate(labels, step, n_iters))

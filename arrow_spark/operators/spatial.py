@@ -130,7 +130,7 @@ def dbscan(
     ``max_iter`` caps the CC rounds, counting the round that stops it;
     it raises ``RuntimeError`` when the core graph needs more.
     """
-    from arrow_spark.checkpoint import Generations
+    from arrow_spark.checkpoint import Generations, ckpt_release
     from arrow_spark.llm.dedup import connected_components
 
     pts = points.select(
@@ -162,6 +162,8 @@ def dbscan(
         # consumed twice (border assignment + final output join):
         # materialize the node-scale label frame once
         core_lbl = g.keep(g.ckpt(core_lbl))
+        # core_lbl has materialized, so nothing reads CC's output again
+        ckpt_release(cc)
         g.keep(pairs)
     border_lbl = (
         pairs.join(core.withColumnRenamed("id", "lid").hint("merge"), "lid", "left_anti")

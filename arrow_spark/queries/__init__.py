@@ -54,17 +54,6 @@ def _driver_verified(_max_round: int | None = None) -> dict[str, int]:
     ordering from exactly the rounds the committed artifact saw, so the
     artifact stays self-consistent even after the driver writes a newer
     CORRECTNESS file.
-
-    The driver samples a prefix of the registry in insertion order, so
-    ``load_all`` floats never-yet-driver-verified queries to the front:
-    each round's sample then covers the largest possible set of
-    not-yet-verified operators instead of re-checking the same prefix.
-    The round number drives the post-saturation rotation: once every
-    oracle-bearing query has been green at least once, the sample
-    becomes pure re-verification, ordered OLDEST-GREEN-FIRST — with a
-    ~300-query registry and a 50-slot sample, a silent regression in
-    any query surfaces within ~6 rounds (standing policy, COVERAGE.md
-    round-8 section).
     """
     root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     seen: dict[str, int] = {}
@@ -87,22 +76,8 @@ def _driver_verified(_max_round: int | None = None) -> dict[str, int]:
 def load_all() -> dict[str, QueryDef]:
     """Import every query module (side effect: fills REGISTRY).
 
-    Returned in verification-priority order, so the driver's sampled
-    prefix always verifies the largest possible set of not-yet-green
-    operators (module order preserved within each block):
-
-    1. never driver-green AND oracle-bearing — a sampled run can turn
-       these hash-green, the strongest kind of row;
-    2. already driver-green in a past round — re-verification,
-       OLDEST green round first (then module order), so the sample
-       rotates through the whole green registry every ~6 rounds
-       instead of re-checking the same prefix;
-    3. rows-only queries (no oracle) — last: a sampled run can never
-       hash-match them by design, and each has a driver-green
-       hash-exact twin (``similarity_ivf_exact_replay``,
-       ``similarity_pq_exact_replay``, ``sketch_hll_rel``, or in-query
-       error-bound asserts) that already carries its verification, so
-       a slot spent here is strictly weaker than re-verification.
+    Returned in verification-priority order (``_rank_registry``), because
+    the driver samples a prefix of this dict's order.
     """
     for mod in _MODULES:
         importlib.import_module(f"arrow_spark.queries.{mod}")
@@ -113,132 +88,27 @@ def load_all() -> dict[str, QueryDef]:
 def _rank_registry(verified: dict[str, int]) -> list[tuple[str, int, int | None]]:
     """(name, block, last_green_round) in verification-priority order.
 
-    The single source of truth for the ordering contract — load_all's
-    returned dict order, tests/test_registry_order.py's pins, and the
-    committed rotation_candidates.json artifact all derive from here,
-    so the driver's sample and the repo's bookkeeping cannot drift.
+    Three blocks, module order breaking ties inside each:
+
+    0. oracle-bearing and never driver-green — a sampled run can turn
+       these hash-green, the strongest kind of row;
+    1. oracle-bearing and driver-green — re-verification, OLDEST green
+       round first, so the sample rotates through the whole green
+       registry instead of re-checking the same prefix;
+    2. rows-only (no oracle) — a sampled run can never hash-match them.
+
+    The single source of truth for the ordering: load_all's dict order,
+    tests/test_registry_order.py and the committed
+    rotation_candidates.json all derive from here.
     """
-    _ORDER = {k: i for i, k in enumerate(REGISTRY)}
+    order = {k: i for i, k in enumerate(REGISTRY)}
 
     def rank(name: str, qd: QueryDef) -> tuple[int, int, int]:
         if qd.oracle is None:
-            block = 5  # rows-only by design: never consume a sampled slot
-        elif name in verified:
-            # re-verification rotation: oldest green round first, so the
-            # 50-slot sample sweeps the whole green registry in ~6 rounds
-            return 4, verified[name], _ORDER[name]
-        elif name in _DEFER_NEW:
-            # new this round: behind the older unverified backlog, and
-            # ordered by _DEFER_NEW position (wave order), NOT module
-            # position — so when the backlog + waves overflow the sampled
-            # prefix, the overflow is exactly the LATEST-registered wave,
-            # never an older wave that happened to live in a later module
-            return 2, _DEFER_NEW.index(name), 0
-        elif name in _PROMOTE:
-            block = 0
-        else:
-            block = 1
-        return block, _ORDER[name], 0
+            return 2, 0, order[name]
+        if name in verified:
+            return 1, verified[name], order[name]
+        return 0, 0, order[name]
 
     ranked = sorted(REGISTRY.items(), key=lambda kv: rank(*kv))
     return [(name, rank(name, qd)[0], verified.get(name)) for name, qd in ranked]
-
-
-#: Never-green queries that MUST land in this round's sampled prefix
-#: (ahead of the backlog): the two r5 driver-reds (array<string> output
-#: columns crashed the driver's pandas canonicalizer — now emitted as
-#: comma-joined strings) and the §2.3 substrait parity stragglers the
-#: r5 verdict called out as outranking extension queries.
-_PROMOTE: tuple[str, ...] = (
-    "quality_quarantine",
-    "table_diff_reconcile",
-    "substrait_filter_agg",
-    "substrait_window",
-    "substrait_subquery",
-    "substrait_grouping_sets",
-    "declaration_pipeline",
-    "substrait_extension_asof",
-    "substrait_extension_ewma",
-    "substrait_extension_skyline",
-)
-
-#: Oracle-bearing queries first registered this round. They sort behind
-#: the pre-existing never-green backlog so they don't consume sampled
-#: slots the backlog has been waiting on (standing policy, COVERAGE.md
-#: round-7 section). Round 7 resumes registration below the 14-query
-#: backlog: r7's 50-slot sample covers backlog first, then these.
-_DEFER_NEW: tuple[str, ...] = (
-    "stats_chi_square_independence",
-    "stats_mutual_information",
-    "stats_two_proportion_ztest",
-    "stats_ks_two_sample",
-    "stats_fdr_bh_adjust",
-    "stats_decile_lift",
-    "analytics_pareto_cumshare",
-    "analytics_retention_new_returning",
-    "analytics_markov_transitions",
-    "analytics_attribution_time_decay",
-    "recommend_cooccurrence_topk",
-    "histogram2d_density",
-    "timeseries_acf",
-    "table_checksum_buckets",
-    "corpus_lang_balance_weights",
-    "graph_degree_assortativity",
-    "graph_jaccard_link_prediction",
-    "flight_sql_substrait",
-    "stats_cramers_v",
-    "stats_cohens_kappa",
-    "quality_woe_iv",
-    "graph_clustering_coefficient",
-    "events_intergap_histogram",
-    "funnel_time_to_convert",
-    "sessions_interval_spans",
-    "embedding_norm_profile",
-    "quality_entropy_profile",
-    "analytics_cohort_ltv",
-    "stats_mad_robust",
-    "quality_outlier_iqr",
-    "stats_trimmed_mean",
-    "timeseries_seasonal_naive_mase",
-    "stats_spearman_rank_corr",
-    "stats_benford_first_digit",
-    "analytics_hhi_concentration",
-    "text_type_token_ratio",
-    # wave 5: registered AFTER the r7 sample prefix was already full —
-    # these four deliberately overflow into round 8's sample (block-2
-    # ordering follows this tuple, so the overflow is exactly them).
-    "timeseries_cross_correlation",
-    "graph_reciprocity",
-    "analytics_price_elasticity",
-    "stats_brown_forsythe",
-    # round 8: new registrations sort BEHIND the wave-5 backlog above so
-    # the r8 sample saturates the oracle-bearing registry first (standing
-    # policy, COVERAGE.md).
-    "exact_quantiles_grouped",
-    "exact_quantiles_weighted",
-    "stats_mann_whitney_u",
-    "stats_anova_oneway",
-    "stats_jarque_bera",
-    "timeseries_rolling_median",
-    "analytics_yoy_growth",
-    "analytics_price_volume_mix",
-    "analytics_abc_classification",
-    "dedup_containment_pairs",
-    "stats_kendall_tau",
-    "stats_permutation_test",
-    "stats_runs_test",
-    "embedding_covariance",
-    "stats_friedman",
-    # round 9: the registry is saturated (312/312 driver-green), so the
-    # sole newcomer sorts first among block-2 and the remaining ~49
-    # slots re-verify the stalest greens (block-4 rotation).
-    "agg_quantile_modes",
-    # round 12: the embedding emission guard (VERDICT r11 #2) — sole
-    # newcomer, sorts first; the rest of the sample rotates stalest-green.
-    "dedup_embedding_topk",
-    # round 13: the NON-VACUOUS embedding-guard twin (VERDICT r12 #3) —
-    # threshold 0.40 makes the pair relation non-empty on the fixture,
-    # so the QUALIFY-oracle hash match finally exercises LSH recall and
-    # the rank-cut semantics on real rows.
-    "dedup_embedding_topk_dense",
-)

@@ -504,47 +504,11 @@ def similarity_pq_exact_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     books: list[dict[int, list[float]]] = []
     code_cols = []
     for s in range(_PQ_M):
-        sv = emb.select("vec_id", sub(F.col("e"), s).alias("v"))
-        cents = {
-            r["vec_id"]: [float(x) for x in r["v"]]
-            for r in sv.where(F.col("vec_id") < _PQ_K).collect()
-        }
-        assign = None
-        for _ in range(_PQ_ITERS):
-            dists = F.array(
-                *[
-                    F.struct(
-                        _fold_sq_dist(F.col("v"), cents[code]).alias("dist"),
-                        F.lit(code).alias("code"),
-                    )
-                    for code in sorted(cents)
-                ]
-            )
-            assign = sv.withColumn("code", F.array_min(dists)["code"])
-            sums = (
-                assign.select("code", F.posexplode("v").alias("pos", "val"))
-                .groupBy("code", "pos")
-                .agg(F.sum("val").alias("sm"), F.count(F.lit(1)).alias("n"))
-                .groupBy("code")
-                .agg(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(
-                                F.struct(
-                                    "pos",
-                                    (F.col("sm").cast("double") / F.col("n").cast("double")).alias("m"),
-                                )
-                            )
-                        ),
-                        lambda st: st["m"],
-                    ).alias("c")
-                )
-                .collect()
-            )
-            new_c = {r["code"]: list(r["c"]) for r in sums}
-            cents = {code: new_c.get(code, c) for code, c in cents.items()}
+        assign, cents = pinned_lloyd(
+            emb.select("vec_id", sub(F.col("e"), s).alias("e")), _PQ_K, _PQ_ITERS
+        )
         books.append(cents)
-        code_cols.append(assign.select("vec_id", F.col("code").alias(f"code{s}")))
+        code_cols.append(assign.select("vec_id", F.col("cid").alias(f"code{s}")))
 
     codes = emb.select("vec_id")
     for s in range(_PQ_M):

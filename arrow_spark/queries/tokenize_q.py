@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from arrow_spark.catalog import table
+from arrow_spark.checkpoint import ckpt_release
 from arrow_spark.llm.tokenize import bpe_train, encode_documents, word_counts
 from arrow_spark.queries.base import query
 
@@ -96,7 +97,8 @@ def tokenize_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Learn 10 BPE merges over the documents corpus; return the rule
     table (rank, lhs, rhs, freq) — rule identity AND frequency checked."""
     wc = word_counts(table(spark, sf_dir, "documents"))
-    merges, _ = bpe_train(wc, N_MERGES)
+    merges, symbols = bpe_train(wc, N_MERGES)
+    ckpt_release(symbols)  # only the driver-side merge list is read
     return spark.createDataFrame(
         [(m["rank"], m["lhs"], m["rhs"], m["freq"]) for m in merges],
         "rank int, lhs string, rhs string, freq long",
@@ -108,7 +110,8 @@ def tokenize_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train 10 merges, then BPE-encode every document; per-doc word and
     token counts are value-hash checked against the positional replay."""
     docs = table(spark, sf_dir, "documents")
-    merges, _ = bpe_train(word_counts(docs), N_MERGES)
+    merges, symbols = bpe_train(word_counts(docs), N_MERGES)
+    ckpt_release(symbols)  # encoding re-applies the merge list
     return encode_documents(docs, merges).select(
         "id",
         F.col("n_words").cast("long").alias("n_words"),

@@ -44,6 +44,24 @@ def _call_options(token: str | None):
     )
 
 
+def _server_middleware(token: str | None) -> dict:
+    """Server side of the same contract: every RPC must carry
+    ``authorization: Bearer <token>`` or is rejected with UNAUTHENTICATED
+    before the handler body runs. No token → no middleware."""
+    if not token:
+        return {}
+    flight = _flight()
+    want = f"Bearer {token}"
+
+    class _BearerMiddlewareFactory(flight.ServerMiddlewareFactory):
+        def start_call(self, info, headers):
+            got = headers.get("authorization") or headers.get("Authorization") or []
+            if want not in got:
+                raise flight.FlightUnauthenticatedError("missing or invalid bearer token")
+
+    return {"auth": _BearerMiddlewareFactory()}
+
+
 def list_flights(location: str, token: str | None = None) -> list[dict]:
     """ListFlights (server.h:248): driver-side catalog listing — one dict
     per advertised flight: path, row/byte totals, endpoint count."""
@@ -94,24 +112,9 @@ def start_flight_server(
     flight = _flight()
     import pyarrow as pa
 
-    class _BearerMiddlewareFactory(flight.ServerMiddlewareFactory):
-        def __init__(self, token: str):
-            self._want = f"Bearer {token}"
-
-        def start_call(self, info, headers):
-            got = headers.get("authorization") or headers.get("Authorization") or []
-            if self._want not in got:
-                raise flight.FlightUnauthenticatedError(
-                    "missing or invalid bearer token"
-                )
-
-    middleware = (
-        {"auth": _BearerMiddlewareFactory(auth_token)} if auth_token else None
-    )
-
     class _EngineFlightServer(flight.FlightServerBase):
         def __init__(self):
-            super().__init__(location, middleware=middleware or {})
+            super().__init__(location, middleware=_server_middleware(auth_token))
             self.tables: dict[str, pa.Table] = {}
             # DoPut arrives on one gRPC stream PER UPLOADING PARTITION —
             # concurrent read-modify-writes on the same name lose batches

@@ -76,7 +76,12 @@ from pyspark.sql import DataFrame, SparkSession
 # command is tagged fields exactly like a substrait rel.
 from arrow_spark.plans.substrait import _Msg
 from arrow_spark.plans.substrait_builder import f_msg, f_str, f_varint
-from arrow_spark.sources.flight import _call_options, _flight, read_flight_info
+from arrow_spark.sources.flight import (
+    _call_options,
+    _flight,
+    _server_middleware,
+    read_flight_info,
+)
 
 _TYPE_PREFIX = "type.googleapis.com/arrow.flight.protocol.sql."
 
@@ -91,19 +96,6 @@ _SQL_INFO_IDS = {
     5: "FLIGHT_SQL_SERVER_SUBSTRAIT",
     8: "FLIGHT_SQL_SERVER_TRANSACTION",
 }
-
-
-def _varint_u64(v: int) -> bytes:
-    """Unsigned-64 varint; negatives sign-extend to 10 bytes (protobuf
-    int64 rule) — needed for DoPutUpdateResult.record_count = -1."""
-    v &= (1 << 64) - 1
-    out = bytearray()
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        out.append(b | (0x80 if v else 0))
-        if not v:
-            return bytes(out)
 
 
 def _any_wrap(msg_name: str, value: bytes) -> bytes:
@@ -150,20 +142,9 @@ def start_flight_sql_server(
     flight = _flight()
     import pyarrow as pa
 
-    class _BearerMiddlewareFactory(flight.ServerMiddlewareFactory):
-        def __init__(self, token: str):
-            self._want = f"Bearer {token}"
-
-        def start_call(self, info, headers):
-            got = headers.get("authorization") or headers.get("Authorization") or []
-            if self._want not in got:
-                raise flight.FlightUnauthenticatedError("missing or invalid bearer token")
-
-    middleware = {"auth": _BearerMiddlewareFactory(auth_token)} if auth_token else {}
-
     class _FlightSqlServer(flight.FlightServerBase):
         def __init__(self):
-            super().__init__(location, middleware=middleware)
+            super().__init__(location, middleware=_server_middleware(auth_token))
             self._results: dict[str, pa.Table] = {}
             self._prepared: dict[str, str] = {}
             # handle -> serialized substrait.Plan bytes (prepared via
@@ -492,7 +473,7 @@ def start_flight_sql_server(
                 # CommandStatementUpdate below.
                 self._check_txn(cmd)
                 self._run_plan(self._plan_bytes(cmd))
-                writer.write(pa.py_buffer(_varint_u64(1 << 3) + _varint_u64(-1)))
+                writer.write(pa.py_buffer(f_varint(1, -1)))
                 return
             if name == "CommandStatementUpdate":
                 self._check_txn(cmd)
@@ -518,7 +499,7 @@ def start_flight_sql_server(
             # raw DoPutUpdateResult{record_count=1} in app_metadata (spec:
             # NOT Any-wrapped); Spark DML doesn't surface affected rows →
             # -1 = "unknown" per the proto comment.
-            writer.write(pa.py_buffer(_varint_u64(1 << 3) + _varint_u64(-1)))
+            writer.write(pa.py_buffer(f_varint(1, -1)))
 
         def do_action(self, context, action):
             if action.type == "CreatePreparedStatement":

@@ -1,4 +1,4 @@
-"""Dump .explain("formatted") for named queries to plans/r13/<q>_<tag>.txt.
+"""Dump .explain("formatted") for named queries to plans/<PLANS_TAG_DIR>/<q>_<tag>.txt.
 
 Usage: python scripts/dump_plans.py <tag> <query> [query ...]
 

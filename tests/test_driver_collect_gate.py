@@ -48,7 +48,7 @@ ALLOWED: dict[tuple[str, str], tuple[int, str]] = {
     ("testing/oracle.py", "run_compare"): (1, "test harness by design — sf-bounded oracle comparison"),
     ("queries/extras.py", "parquet_bloom_point_lookup"): (1, "1-row min() aggregate — the probe key"),
     ("queries/similarity.py", "pinned_lloyd"): (2, "k query vectors + k centroids — the pinned-iteration replay twin's index metadata"),
-    ("queries/similarity.py", "similarity_pq_exact_replay"): (3, "k probe vectors + PQ codebooks — replay-twin metadata, k- and codebook-bounded"),
+    ("queries/similarity.py", "similarity_pq_exact_replay"): (1, "k probe vectors — replay-twin metadata, k-bounded (its codebooks train in pinned_lloyd)"),
 }
 
 

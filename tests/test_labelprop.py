@@ -48,3 +48,11 @@ def test_lpa_deterministic_across_runs(spark):
     a = sorted(map(tuple, label_propagation(edges, n_iters=3).collect()))
     b = sorted(map(tuple, label_propagation(edges, n_iters=3).collect()))
     assert a == b
+
+
+def test_lpa_zero_rounds_labels_every_node_itself(spark):
+    # no round runs: the result is the round-0 projection over the
+    # symmetrized edge checkpoint, which must outlive the call
+    edges = spark.createDataFrame([(1, 2, 1), (2, 3, 1)], "src long, dst long, w long")
+    rows = label_propagation(edges, n_iters=0).collect()
+    assert sorted((r["node"], r["label"]) for r in rows) == [(1, 1), (2, 2), (3, 3)]

@@ -2,7 +2,7 @@
 ``load_all`` must float never-driver-verified queries to the front
 (oracle-bearing before rows-only) and sink already-verified ones."""
 
-from arrow_spark.queries import _DEFER_NEW, _PROMOTE, _driver_verified, load_all
+from arrow_spark.queries import _driver_verified, load_all
 
 QUERIES = load_all()
 VERIFIED = _driver_verified()
@@ -11,14 +11,8 @@ VERIFIED = _driver_verified()
 def _block(name: str) -> int:
     qd = QUERIES[name]
     if qd.oracle is None:
-        return 5  # rows-only: demoted below re-verification (COVERAGE.md r7)
-    if name in VERIFIED:
-        return 4
-    if name in _DEFER_NEW:
-        return 2
-    if name in _PROMOTE:
-        return 0
-    return 1
+        return 2  # rows-only: below re-verification
+    return 1 if name in VERIFIED else 0
 
 
 def test_blocks_are_monotonic():
@@ -39,23 +33,6 @@ def test_no_verified_query_before_an_unverified_oracle_query():
     assert all(i < first_verified for i in unverified_oracle)
 
 
-def test_promoted_names_lead_when_unverified():
-    names = list(QUERIES)
-    for p in _PROMOTE:
-        if p in QUERIES and p not in VERIFIED:
-            assert QUERIES[p].oracle is not None, f"{p} promoted but has no oracle"
-            backlog = [
-                n
-                for n in names
-                if n not in VERIFIED
-                and QUERIES[n].oracle is not None
-                and n not in _PROMOTE
-                and n not in _DEFER_NEW
-            ]
-            if backlog:
-                assert names.index(p) < names.index(backlog[0])
-
-
 def test_reverification_rotates_oldest_green_first():
     """Post-saturation contract (COVERAGE.md round-8): within the
     already-green block, queries last green in an OLDER round sort
@@ -66,7 +43,7 @@ def test_reverification_rotates_oldest_green_first():
     green_rounds = [
         VERIFIED[n]
         for n in names
-        if n in VERIFIED and QUERIES[n].oracle is not None and _block(n) == 4
+        if n in VERIFIED and QUERIES[n].oracle is not None and _block(n) == 1
     ]
     assert green_rounds == sorted(green_rounds)
 

@@ -116,6 +116,19 @@ def test_dbscan_failing_components_frees_pairs(spark):
     assert persistent().size() <= before
 
 
+def test_dbscan_keeps_only_the_generations_its_output_reads(spark):
+    # the output reads the neighbor pairs and the core labels; CC's own
+    # output generation is freed once the core labels have materialized
+    from arrow_spark.operators.spatial import dbscan
+
+    df = spark.createDataFrame([(i, i, 0) for i in range(8)], "id long, x long, y long")
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persistent().keySet())
+    out = dbscan(df, "id", eps=2, min_pts=2)
+    assert {r["cluster"] for r in out.collect()} == {0}
+    assert len(set(persistent().keySet()) - before) == 2
+
+
 def test_dbscan_singleton_core_cluster_is_own_id(spark):
     # min_pts=1: every point is core; isolated point = its own cluster
     pts = [(5, 0, 0), (9, 10_000, 10_000)]

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import collections
 
+import pytest
 from pyspark.sql import functions as F
 
 from arrow_spark.llm.tokenize import (
@@ -138,3 +139,15 @@ def test_vocab_roundtrip_serves_identical_encoding(spark, tmp_path):
     fresh = {r["word"]: r["tokens"] for r in encode_words(_wc_df(spark, wc), merges).collect()}
     served = {r["word"]: r["tokens"] for r in encode_words(_wc_df(spark, wc), loaded).collect()}
     assert fresh == served
+
+
+@pytest.mark.parametrize("name", ["tokenize_bpe_merges", "tokenize_bpe_encode"])
+def test_bpe_queries_free_the_symbols_generation(spark, sf_dir, name):
+    # both queries read only the driver-side merge list, so the symbols
+    # frame bpe_train returns leaves no persisted generation behind
+    from arrow_spark.queries import load_all
+
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persistent().keySet())
+    load_all()[name].fn(spark, sf_dir).collect()
+    assert set(persistent().keySet()) - before == set()
