@@ -15,12 +15,20 @@ raised during PLANNING, before any task runs. Proven empirically in the
 round-12 second-decade sweep: the connected-components loop at gen-sf3
 (76,814-doc template chain) died at round ~25 with exactly this error.
 
-The fix: rebuild the Dataset over the checkpointed RDD. The rebuilt frame
-drops the origin stats and reports ``defaultSizeInBytes``
-(``Long.MaxValue``), which (a) stays bounded round-over-round and (b) can
-never be elected a broadcast build side — the conservative direction for
-loop-carried state at 100 TB (you never want the planner silently
-broadcasting a frame whose size is loop-dependent).
+The fix: rebuild the Dataset over the checkpointed RDD with the origin
+estimate replaced by the generation's MEASURED size — the bytes its
+persisted blocks occupy, read from Spark's storage status once the
+generation has materialized (no Spark job). Each generation is measured
+from its own data, never derived from its parent's estimate, so the
+estimate (a) stays bounded round-over-round and (b) is a real size the
+planner can act on: a generation below
+``spark.sql.autoBroadcastJoinThreshold`` is broadcast when Catalyst
+plans the next round — the rule Spark applies to a parquet scan's file
+size — so the loop-invariant side of the round's join is never
+shuffled, while a generation above it plans a shuffle join exactly as
+an unknown size would. A generation not yet materialized (lazy) or not
+yet fully reported reports ``defaultSizeInBytes`` (``Long.MaxValue``),
+the conservative direction.
 
 Discovered and first applied in ``llm/dedup.connected_components`` (r12);
 hoisted here in r13 so every iterative operator shares one audited
@@ -45,6 +53,7 @@ Spark-native extension, so this hazard has no reference analog.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
@@ -66,15 +75,21 @@ def ckpt_reset_stats(df: DataFrame, eager: bool = True) -> DataFrame:
     range' raised from SizeInBytesOnlyStatsPlanVisitor during PLANNING,
     before any task runs — hit by the CC loop at gen-sf3 around round
     25 (r12 second-decade sweep). Rebuilding the Dataset over the
-    checkpointed RDD drops the origin stats: the frame then reports
-    defaultSizeInBytes (Long.MaxValue), which (a) stays bounded
-    round-over-round and (b) can never be elected a broadcast build
-    side — the conservative direction for loop-carried state.
+    checkpointed RDD drops the origin stats; an eager generation then
+    reports its measured stored bytes (``memSize + diskSize`` of its
+    persisted RDD, from ``SparkContext.getRDDStorageInfo``, which runs
+    no job), so the estimate is bounded by the data itself and a
+    generation under the broadcast threshold can be a broadcast build
+    side. A lazy generation reports ``defaultSizeInBytes``
+    (``Long.MaxValue``) until ``Generations.iterate`` measures it after
+    the action that materializes it. The rebuilt frame carries no
+    output partitioning, ordering or constraints: size is its only
+    planning input.
 
-    Implementation note: the rebuild goes through two PRIVATE JVM-side
-    APIs (``SparkSession.internalCreateDataFrame`` and
-    ``QueryExecution.toRdd``), verified working on PySpark 4.1. They do
-    not exist under Spark Connect and could change across Spark
+    Implementation note: the rebuild goes through PRIVATE JVM-side APIs
+    (the ``LogicalRDD`` copy, the ``Statistics`` constructor and the
+    classic ``Dataset.ofRows``), verified working on PySpark 4.1.2. They
+    do not exist under Spark Connect and could change across Spark
     upgrades, so incompatibility fails LOUDLY here — at the helper, with
     a message naming the contract — rather than deep inside an iterative
     loop as an opaque Py4J error (ADVICE r12).
@@ -110,35 +125,95 @@ def ckpt_reset_stats(df: DataFrame, eager: bool = True) -> DataFrame:
     ``until`` keeps this order).
     """
     ck = df.localCheckpoint(eager=eager, storageLevel=StorageLevel.MEMORY_AND_DISK)
-    spark = ck.sparkSession
-    if not hasattr(spark, "_jsparkSession"):
+    if not hasattr(ck.sparkSession, "_jsparkSession"):
         raise RuntimeError(
             "ckpt_reset_stats requires classic (JVM) PySpark: it rebuilds "
-            "the Dataset over the checkpointed RDD via the private "
-            "SparkSession.internalCreateDataFrame API, which does not "
-            "exist under Spark Connect. Run iterative operators on a "
-            "classic session, or replace this helper with a "
-            "checkpoint-to-storage round trip."
+            "the Dataset over the checkpointed RDD via private Catalyst "
+            "APIs (LogicalRDD, Dataset.ofRows), which do not exist under "
+            "Spark Connect. Run iterative operators on a classic session, "
+            "or replace this helper with a checkpoint-to-storage round trip."
         )
+    return _rebuild(ck, measure=eager)
+
+
+def _rebuild(ck: DataFrame, measure: bool) -> DataFrame:
+    """A fresh frame over checkpoint ``ck``'s LogicalRDD whose only
+    statistic is the generation's stored size (``measure``) or unknown."""
+    spark = ck.sparkSession
     try:
-        jdf = ck._jdf
-        new_jdf = spark._jsparkSession.internalCreateDataFrame(
-            jdf.queryExecution().toRdd(), jdf.schema(), False
+        jvm, session = spark._jvm, spark._jsparkSession
+        none = getattr(getattr(jvm.scala, "None$"), "MODULE$")
+        rdd_plan = ck._jdf.queryExecution().analyzed().newInstance()
+        size = _stored_bytes(spark, rdd_plan.rdd()) if measure else None
+        stats = none if size is None else jvm.scala.Some(_statistics(jvm, size))
+        plan = rdd_plan.copy(
+            rdd_plan.output(),
+            rdd_plan.rdd(),
+            jvm.org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning(0),
+            getattr(getattr(jvm.scala.collection.immutable, "Nil$"), "MODULE$"),
+            rdd_plan.isStreaming(),
+            rdd_plan.stream(),
+            session,
+            stats,
+            none,
         )
-    except Exception as exc:  # pragma: no cover - Spark-upgrade canary
+        new_jdf = jvm.org.apache.spark.sql.classic.Dataset.ofRows(session, plan)
+    except Py4JError as exc:  # pragma: no cover - Spark-upgrade canary
         raise RuntimeError(
             "ckpt_reset_stats: the private Spark APIs it relies on "
-            "(SparkSession.internalCreateDataFrame / QueryExecution.toRdd, "
-            "verified on PySpark 4.1) failed — a Spark upgrade likely "
-            "changed them. Without the stats reset, join-bearing iterative "
-            "loops compound size estimates to BigInteger overflow at "
-            "planning time; fix this helper before re-enabling the loops."
+            "(LogicalRDD.copy / Statistics / Dataset.ofRows / "
+            "SparkContext.getRDDStorageInfo, verified on PySpark 4.1.2) "
+            "failed — a Spark upgrade likely changed them. Without the "
+            "stats reset, join-bearing iterative loops compound size "
+            "estimates to BigInteger overflow at planning time; fix this "
+            "helper before re-enabling the loops."
         ) from exc
     out = DataFrame(new_jdf, spark)
     # handle for ckpt_release: the checkpoint Dataset whose analyzed plan
     # (a LogicalRDD) owns the persisted RDD generation
     out._ckpt_src = ck
     return out
+
+
+def _stored_bytes(spark, rdd) -> int | None:
+    """Bytes the persisted ``rdd`` occupies in memory and on disk, or
+    None until every partition's block is reported: the storage status
+    is fed by the listener bus, and a partial sum would understate a
+    generation into a broadcast. An RDD without partitions stores none."""
+    rdd_id, parts = rdd.id(), rdd.getNumPartitions()
+    for info in spark.sparkContext._jsc.sc().getRDDStorageInfo():
+        if info.id() == rdd_id and info.numCachedPartitions() == parts:
+            return info.memSize() + info.diskSize()
+    return 0 if parts == 0 else None
+
+
+def _statistics(jvm, size: int):
+    """``Statistics(sizeInBytes = size)`` built on the JVM side: py4j
+    returns a ``scala.math.BigInt`` to Python as an ``int``, so the
+    ``BigInt.apply(long)`` step is composed into the constructor."""
+    handles = jvm.java.lang.invoke.MethodHandles
+    lookup = handles.publicLookup()
+    cls = jvm.java.lang.Class.forName
+    ctor = lookup.unreflectConstructor(
+        cls("org.apache.spark.sql.catalyst.plans.logical.Statistics").getConstructors()[0]
+    )
+    bigint = cls("scala.math.BigInt")
+    to_bigint = lookup.findStatic(
+        bigint,
+        "apply",
+        jvm.java.lang.invoke.MethodType.methodType(bigint, jvm.java.lang.Long.TYPE),
+    )
+    defaults = getattr(
+        getattr(jvm.org.apache.spark.sql.catalyst.plans.logical, "Statistics$"), "MODULE$"
+    )
+    return handles.collectArguments(ctor, 0, to_bigint).invokeWithArguments(
+        [
+            size,
+            getattr(defaults, "apply$default$2")(),
+            getattr(defaults, "apply$default$3")(),
+            getattr(defaults, "apply$default$4")(),
+        ]
+    )
 
 
 def ckpt_release(frame: DataFrame) -> bool:
@@ -203,6 +278,16 @@ class Generations:
         if self._owned.pop(id(frame), None) is not None:
             ckpt_release(frame)
 
+    def _measured(self, frame: DataFrame) -> DataFrame:
+        """The owned lazy generation ``frame``, materialized since, as a
+        frame that reports its stored size; it takes over ownership and
+        the release handle."""
+        out = _rebuild(frame._ckpt_src, measure=True)
+        del self._owned[id(frame)]
+        self._owned[id(out)] = out
+        frame._ckpt_src = None
+        return out
+
     def iterate(self, state: DataFrame, step, rounds: int, until=None) -> DataFrame:
         """Run ``state = ckpt(step(state, i))`` for i in range(rounds).
 
@@ -210,12 +295,17 @@ class Generations:
         one action. With ``until`` it is lazy, ``until(new)`` is the
         action that materializes it, and the loop stops at the first
         round where it is true — or raises ``RuntimeError`` when
-        ``rounds`` pass without that. Either way the predecessor is
-        released only after its successor has materialized.
+        ``rounds`` pass without that; once ``until`` has materialized
+        the generation, it is swapped for one carrying its measured
+        size. Either way the predecessor is released only after its
+        successor has materialized.
         """
+        done = False
         for i in range(rounds):
             new = self.ckpt(step(state, i), eager=until is None)
-            done = until is not None and until(new)
+            if until is not None:
+                done = until(new)
+                new = self._measured(new)
             self.release(state)
             state = new
             if done:

@@ -738,7 +738,9 @@ def connected_components(
     once) and the per-round edge set is provably non-increasing (the
     paper's monotonicity lemma), so peak state is the input edge list;
     each round is two map-side-combinable min-aggregations + two
-    equi-joins + one dedupe, all keyed on vertex ids — broadcast-free.
+    equi-joins + one dedupe, all keyed on vertex ids; a join side is
+    broadcast only while its generation's stored size is under the
+    broadcast threshold.
     Checkpoints go through ckpt_reset_stats, NOT bare localCheckpoint
     (preserved origin-size estimates compound to BigInteger overflow in
     join-bearing loops — see arrow_spark/checkpoint.py), and every

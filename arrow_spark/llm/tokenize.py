@@ -183,14 +183,20 @@ def bpe_train(
             lhs, rhs, freq = top[0]["lhs"], top[0]["rhs"], top[0]["freq"]
             merges.append({"rank": rank, "lhs": lhs, "rhs": rhs, "freq": int(freq)})
             cur = cur.withColumn("syms", merge_pair(F.col("syms"), lhs, rhs))
-            if rank % checkpoint_every == 0 or rank == n_merges:
+            if rank % checkpoint_every == 0:
                 # the superseded generation is freed once this one has
                 # materialized (the checkpoint is eager)
                 cur = g.ckpt(cur)
                 g.release(gen)
                 gen = cur
-        # the returned symbols read the last generation
-        g.keep(gen)
+        if cur is not gen:
+            # merges pending since the last checkpoint: after the last
+            # rank, or when the word table ran out of pairs before it
+            cur = g.ckpt(cur)
+            g.release(gen)
+        # the returned symbols are the last generation itself, so the
+        # caller's ckpt_release frees it
+        g.keep(cur)
     return merges, cur
 
 

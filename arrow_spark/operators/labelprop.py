@@ -58,8 +58,9 @@ def label_propagation(
         # Checkpoint the loop-invariant symmetrized edge frame ONCE (the
         # CC-loop `sym` pattern): every round joins labels against it, so
         # an unmaterialized edge lineage (event-scan + window + groupBy)
-        # would be recomputed per round. Stats-reset so the corpus-scale
-        # frame can never be elected a broadcast side.
+        # would be recomputed per round. Stats-reset so it reports its
+        # stored size: a broadcast side only under the broadcast
+        # threshold, never at corpus scale.
         und = g.ckpt(und)
 
         def step(labels: DataFrame, _: int) -> DataFrame:

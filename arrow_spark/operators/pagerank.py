@@ -130,8 +130,9 @@ def _walk(
         # that never change. Carrying `ow` as an edge column keeps the
         # per-row arithmetic (r * w / ow over identical w, ow values)
         # byte-identical while the contribution step becomes a single
-        # edges⋈ranks join. Stats-reset (not bare) so the corpus-scale edge
-        # frame can never be elected a broadcast side.
+        # edges⋈ranks join. Stats-reset (not bare) so the edge frame
+        # reports its stored size: broadcast only while it is under the
+        # broadcast threshold, a shuffle join at corpus scale.
         outw = e.groupBy("src").agg(F.sum("w").alias("ow"))
         e = g.ckpt(e.join(outw, "src"))
         # Node set with a has_out flag (r14): dangling mass was an

@@ -70,7 +70,8 @@ def shortest_paths(
         # Checkpoint the loop-invariant edge frame ONCE (the CC-loop `sym`
         # pattern): every relaxation round joins dist against it, so an
         # unmaterialized edge lineage would be recomputed per round.
-        # Stats-reset so the corpus-scale frame is never broadcast-elected.
+        # Stats-reset so it reports its stored size: broadcast only under
+        # the broadcast threshold, never at corpus scale.
         e = g.ckpt(e)
 
         def step(dist: DataFrame, _: int) -> DataFrame:

@@ -143,8 +143,9 @@ def dbscan(
         # The ε-neighborhood frame feeds THREE consumers (degree count,
         # the core-edge filter into CC, border assignment) — materialize
         # the 9-cell-explode self-join once instead of recomputing it per
-        # consumer. Stats-reset so the density-scale pair frame is never
-        # broadcast-elected. Freed if CC raises; otherwise it stays
+        # consumer. Stats-reset so the pair frame reports its stored size
+        # (a broadcast side only under the broadcast threshold, never at
+        # density scale). Freed if CC raises; otherwise it stays
         # persisted until the caller's action ends (the output plan
         # reads it).
         pairs = g.ckpt(pairs)

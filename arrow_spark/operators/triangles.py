@@ -91,9 +91,10 @@ def count_triangles(
     # preserved origin estimate (itself a 3-way join product) gets cubed;
     # and callers may legally invoke count_triangles inside their own
     # loops (k-truss-style peeling drivers), where the compounding chain
-    # from arrow_spark/checkpoint.py applies verbatim. Resetting stats
-    # also guarantees the planner never elects an edge frame as a
-    # broadcast build side — the only safe default at 100 TB.
+    # from arrow_spark/checkpoint.py applies verbatim. The reset frame
+    # reports its stored size, so the planner elects the edge frame as a
+    # broadcast build side only while it is under the broadcast
+    # threshold — never at 100 TB.
     o = ckpt_reset_stats(orient_edges(edges, src, dst))
     w1 = o.select(F.col("lo").alias("u"), F.col("hi").alias("v"))
     w2 = o.select(F.col("lo").alias("u"), F.col("hi").alias("w"))

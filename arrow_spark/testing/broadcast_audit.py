@@ -38,6 +38,13 @@ form). Builds whose subtree reaches an ExistingRDD leaf with NO
 visible agg/explode now flag as kind "ckpt"; builds where agg/explode
 are already visible keep their existing signature (the prior
 classification already covers them).
+
+The "ckpt" kind cannot tell the two checkpoint shapes apart, and both
+still flag. A bare ``localCheckpoint`` frame carries its origin
+estimate, which does not track the data: that is the hazard. A
+``ckpt_reset_stats`` generation carries its MEASURED stored bytes, so
+its broadcast is size-tracked like a scan's and turns itself off above
+the threshold; its allowlist entries are classified as measured.
 """
 
 from __future__ import annotations

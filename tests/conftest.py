@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
+from contextlib import contextmanager
 
 import pytest
 
@@ -41,3 +43,25 @@ def set_conf(spark):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, value)
+
+
+@pytest.fixture
+def jobs_run(spark):
+    """``with jobs_run() as ids:`` collects the ids of the Spark jobs the
+    block submits (its job group, read once the listener bus is idle)."""
+    sc = spark.sparkContext
+
+    @contextmanager
+    def run():
+        group = f"jobs-run-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        ids: list[int] = []
+        try:
+            yield ids
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

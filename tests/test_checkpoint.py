@@ -67,33 +67,77 @@ def test_bare_localcheckpoint_compounds_estimates(spark):
     assert ests[-1] > ests[0] ** 2, ests
 
 
+def _stored(frame) -> int:
+    """The stored bytes of the generation behind a ckpt_reset_stats frame."""
+    rdd_id = frame._ckpt_src._jdf.queryExecution().analyzed().rdd().id()
+    sc = frame.sparkSession.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    (info,) = [i for i in sc.getRDDStorageInfo() if i.id() == rdd_id]
+    return info.memSize() + info.diskSize()
+
+
+def _planned_joins(df) -> str:
+    plan = df._jdf.queryExecution().sparkPlan().toString()
+    return " ".join(j for j in ("BroadcastHashJoin", "SortMergeJoin") if j in plan)
+
+
 def test_reset_stats_bounds_deep_self_join_loop(spark):
-    """Same loop, stats-reset checkpoints: the estimate is pinned at
-    Long.MaxValue every round (bounded — never reaches BigInteger
-    planning math), and values stay exact (the helper is value-neutral).
-    35 rounds ≈ 10 past where the bare shape overflowed at gen-sf3."""
+    """Same loop, stats-reset checkpoints: every round the estimate is
+    the generation's measured stored bytes — a few hundred bytes for 6
+    rows, never derived from the parent's estimate, so it cannot
+    compound toward BigInteger planning math — and values stay exact
+    (the helper is value-neutral). 35 rounds ≈ 10 past where the bare
+    shape overflowed at gen-sf3."""
     df = spark.range(6).select(F.col("id").alias("v"), F.lit(1).cast("long").alias("x"))
     df = ckpt_reset_stats(df)
     for _ in range(35):
         df = ckpt_reset_stats(_self_join_round(df))
-        assert _est(df) == LONG_MAX
+        assert _est(df) == _stored(df) < 64 * 1024
     rows = {r["v"]: r["x"] for r in df.collect()}
     # x doubles every round: 2^35 per vertex
     assert rows == {v: 2**35 for v in range(6)}
 
 
-def test_reset_stats_pins_size_to_default(spark):
-    """The reset frame must report defaultSizeInBytes (Long.MaxValue):
-    bounded round-over-round AND never broadcast-eligible — while the
-    bare checkpoint of the same join preserves the origin estimate."""
+def test_reset_stats_pins_size_to_stored_bytes(spark):
+    """The reset frame reports its stored bytes, so a small generation
+    is broadcast when the next round is planned — while the bare
+    checkpoint of the same join preserves the origin estimate."""
     df = spark.range(100).select(F.col("id").alias("v"), F.lit(1).cast("long").alias("x"))
     joined = _self_join_round(ckpt_reset_stats(df))
-    assert _est(ckpt_reset_stats(joined)) == LONG_MAX
-    # ...while the bare checkpoint PRESERVES the origin join estimate —
-    # here LONG_MAX² scaled by projection width, i.e. ABOVE Long.MaxValue
-    # (stats are BigInt), proving preservation rather than measurement
-    bare = _est(joined.localCheckpoint(eager=True))
-    assert bare != LONG_MAX and bare > LONG_MAX
+    g = ckpt_reset_stats(joined)
+    assert _est(g) == _stored(g) < 64 * 1024
+    assert _planned_joins(_self_join_round(g)) == "BroadcastHashJoin"
+    # the bare checkpoint PRESERVES the origin join estimate — the
+    # product of its inputs' sizes, far above what 100 rows store
+    assert _est(joined.localCheckpoint(eager=True)) == _est(joined) > 10 * _est(g)
+
+
+def test_generation_above_the_threshold_plans_a_shuffle_join(spark, set_conf):
+    """The scale posture: a generation larger than the broadcast
+    threshold is never broadcast, exactly as an unknown size."""
+    df = spark.range(200).select(F.col("id").alias("v"), F.lit(1).cast("long").alias("x"))
+    g = ckpt_reset_stats(df)
+    set_conf("spark.sql.autoBroadcastJoinThreshold", str(_stored(g) // 2))
+    assert _planned_joins(_self_join_round(g)) == "SortMergeJoin"
+    set_conf("spark.sql.autoBroadcastJoinThreshold", str(_stored(g) * 2))
+    assert _planned_joins(_self_join_round(g)) == "BroadcastHashJoin"
+    ckpt_release(g)
+
+
+def test_pagerank_round_jobs_are_pinned(spark, jobs_run):
+    """3 pagerank rounds on a 13-vertex ring with one chord. The measured
+    generations are broadcast into each round's join, so AQE submits
+    no shuffle of the edge side; this was 32 jobs when every generation
+    reported Long.MaxValue."""
+    edges = spark.createDataFrame(
+        [(i, i + 1, 1.0) for i in range(12)] + [(12, 0, 1.0), (0, 6, 1.0)],
+        "src long, dst long, w double",
+    )
+    with jobs_run() as jobs:
+        ranks = pagerank(edges, n_iters=3)
+    assert len(jobs) == 26
+    assert abs(sum(r["rank"] for r in ranks.collect()) - 1.0) < 1e-6
+    ckpt_release(ranks)
 
 
 def test_pagerank_high_iteration_regression(spark):
@@ -239,6 +283,23 @@ def test_iterate_until_stops_lazily_or_raises_naming_the_operator(spark):
     with pytest.raises(RuntimeError, match="halve did not converge in 2 rounds"):
         with Generations("halve") as g:
             g.iterate(seed, halve, 2, until=lambda new: new.count() == 1)
+    assert _n_persistent(spark) == base
+
+
+def test_iterate_until_measures_the_lazy_generation(spark):
+    """A lazy generation is sized once ``until`` has materialized it:
+    the frame ``iterate`` returns reports its stored bytes and still
+    releases its generation."""
+    seed = spark.range(40).select(F.col("id").alias("v"))
+
+    def above_30(state, _):
+        return state.where(F.col("v") > 30)
+
+    base = _n_persistent(spark)
+    with Generations("shrink") as g:
+        out = g.keep(g.iterate(seed, above_30, 5, until=lambda new: new.count() > 0))
+    assert _est(out) == _stored(out) < LONG_MAX
+    assert ckpt_release(out) is True
     assert _n_persistent(spark) == base
 
 

@@ -8,9 +8,6 @@ single job, and the partition count still equals the unit count.
 
 from __future__ import annotations
 
-import uuid
-from contextlib import contextmanager
-
 import pyarrow as pa
 import pyarrow.ipc as ipc
 import pytest
@@ -23,22 +20,6 @@ fl = pytest.importorskip("pyarrow.flight")
 from arrow_spark.sources.flight import read_flight, start_flight_server, write_flight  # noqa: E402
 
 
-@contextmanager
-def jobs_run(spark):
-    """Collects the ids of the Spark jobs the block submits."""
-    sc = spark.sparkContext
-    group = f"source-stages-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    ids: list[int] = []
-    try:
-        yield ids
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def drain(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
@@ -49,19 +30,19 @@ def _events(spark, n=90):
     )
 
 
-def test_ipc_write_and_read_run_one_job_each(spark, tmp_path):
+def test_ipc_write_and_read_run_one_job_each(spark, jobs_run, tmp_path):
     out = str(tmp_path / "ipc")
-    with jobs_run(spark) as jobs:
+    with jobs_run() as jobs:
         write_ipc(_events(spark), out)
     assert len(jobs) == 1
     df = read_ipc(spark, out)
-    with jobs_run(spark) as jobs:
+    with jobs_run() as jobs:
         drain(df)
     assert len(jobs) == 1
     assert sorted(r.k for r in df.collect()) == list(range(90))
 
 
-def test_ipc_multi_unit_file_keeps_one_partition_per_unit(spark, tmp_path):
+def test_ipc_multi_unit_file_keeps_one_partition_per_unit(spark, jobs_run, tmp_path):
     path = str(tmp_path / "one.arrow")
     t = pa.table({"k": pa.array(range(400), pa.int64())})
     with ipc.new_file(path, t.schema) as w:
@@ -70,23 +51,23 @@ def test_ipc_multi_unit_file_keeps_one_partition_per_unit(spark, tmp_path):
     units = _plan_splits([path], spark.sparkContext.defaultParallelism)
     df = read_ipc(spark, path)
     assert df.rdd.getNumPartitions() == len(units) > 1
-    with jobs_run(spark) as jobs:
+    with jobs_run() as jobs:
         drain(df)
     assert len(jobs) == 1
     assert sorted(r.k for r in df.collect()) == list(range(400))
 
 
-def test_flight_put_and_get_run_one_job_each(spark):
+def test_flight_put_and_get_run_one_job_each(spark, jobs_run):
     srv = start_flight_server(rows_per_endpoint=30)
     try:
         loc = f"grpc://127.0.0.1:{srv.port}"
-        with jobs_run(spark) as jobs:
+        with jobs_run() as jobs:
             write_flight(_events(spark), loc, "events")
         assert len(jobs) == 1
         assert srv.tables["events"].num_rows == 90
         df = read_flight(spark, loc, "events")
         assert df.rdd.getNumPartitions() == 3  # one task per endpoint
-        with jobs_run(spark) as jobs:
+        with jobs_run() as jobs:
             drain(df)
         assert len(jobs) == 1
         assert sorted(r.k for r in df.collect()) == list(range(90))
@@ -96,7 +77,7 @@ def test_flight_put_and_get_run_one_job_each(spark):
 
 @pytest.mark.parametrize("partition_by", [[], ["p"]], ids=["flat", "hive"])
 def test_parquet_meta_lists_files_like_the_parquet_reader_without_a_job(
-    spark, tmp_path, partition_by
+    spark, jobs_run, tmp_path, partition_by
 ):
     from arrow_spark.sources.parquet_meta import _files_for
 
@@ -104,7 +85,7 @@ def test_parquet_meta_lists_files_like_the_parquet_reader_without_a_job(
     spark.range(0, 120, 1, 3).withColumn("p", F.col("id") % 4).write.partitionBy(
         *partition_by
     ).parquet(root)
-    with jobs_run(spark) as jobs:
+    with jobs_run() as jobs:
         listed = _files_for(spark, root)
     assert jobs == []
     assert listed == sorted(spark.read.parquet(root).inputFiles())

@@ -8,6 +8,7 @@ import collections
 import pytest
 from pyspark.sql import functions as F
 
+from arrow_spark.checkpoint import ckpt_release
 from arrow_spark.llm.tokenize import (
     bpe_train,
     encode_documents,
@@ -150,4 +151,16 @@ def test_bpe_queries_free_the_symbols_generation(spark, sf_dir, name):
     persistent = spark.sparkContext._jsc.getPersistentRDDs
     before = set(persistent().keySet())
     load_all()[name].fn(spark, sf_dir).collect()
+    assert set(persistent().keySet()) - before == set()
+
+
+def test_bpe_train_frees_its_generation_when_pairs_run_out(spark):
+    # "ab" has one pair: the table runs out after 1 of 3 merges, and the
+    # symbols returned must still be the generation itself
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persistent().keySet())
+    merges, symbols = bpe_train(_wc_df(spark, {"ab": 3}), 3)
+    assert [(m["lhs"], m["rhs"]) for m in merges] == [("a", "b")]
+    assert [r["syms"] for r in symbols.collect()] == [["ab"]]
+    assert ckpt_release(symbols) is True
     assert set(persistent().keySet()) - before == set()
