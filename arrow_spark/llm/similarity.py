@@ -228,156 +228,140 @@ def dequantize(codes_col, params: list[tuple[float, float]]):
 # -- IVF (inverted-file) ANN -------------------------------------------------
 
 
-def _sq_l2(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+def _nearest(v, cmat, n: int):
+    """Indices of the n rows of ``cmat`` nearest to each row of ``v``, by
+    d² = |v|² − 2v·C + |C|² (one BLAS matmul). Ties go to the lower
+    index: the head of a stable argsort, or for n = 1 the first minimum,
+    which is the same index."""
+    import numpy as np
+
+    d2 = (v * v).sum(axis=1)[:, None] - 2.0 * (v @ cmat.T) + (cmat * cmat).sum(axis=1)[None, :]
+    if n == 1:
+        return np.argmin(d2, axis=1)[:, None]
+    return np.argsort(d2, axis=1, kind="stable")[:, :n]
 
 
-def _nearest_centroids(vectors: DataFrame, cents, vec_col: str,
-                       id_col: str, n_take: int) -> DataFrame:
+def _nearest_centroids(vectors: DataFrame, cents, vec_col: str, n_take: int) -> DataFrame:
     """Attach the n_take nearest centroid ids to each vector row.
 
-    Centroids are k rows of index METADATA (they already round-trip the
-    driver via localCheckpoint init/collect), so they ride into the
-    task as broadcast constants and argmin is MAP-ONLY: one BLAS matmul
-    per Arrow batch (d² = |v|² − 2v·C + |C|², stable argsort breaks
-    ties toward the lower cid). No join, no window, no shuffle — at
-    100 TB each Lloyd iteration touches the corpus exactly once with
-    zero exchange. Two rejected alternatives, both measured: the
-    crossJoin+row_number plan shuffles corpus×k rows per iteration; a
-    codegen'd per-centroid fold over k×dim array literals pays ~1.5 s
-    of Catalyst compile PER ITERATION (same lesson as
-    lsh_signatures_vectorized — many folds lose to one matmul).
+    Centroids are k rows of index METADATA, so they ride into the task
+    as constants and the assignment is MAP-ONLY: one ``_nearest`` matmul
+    per Arrow batch. No join, no window, no shuffle — at 100 TB each
+    assignment touches the corpus exactly once with zero exchange. Two
+    rejected alternatives, both measured: the crossJoin+row_number plan
+    shuffles corpus×k rows per pass; a codegen'd per-centroid fold over
+    k×dim array literals pays ~1.5 s of Catalyst compile per pass (same
+    lesson as lsh_signatures_vectorized — many folds lose to one
+    matmul).
 
     ``cents`` is either a (cid, cv) DataFrame (the public index
-    contract, e.g. from read_ivf_index) or an already-driver-side list
-    of (cid, cv) pairs — the r14 Lloyd loops keep centroid state in
-    Python between iterations, so the per-iteration collect-a-
-    checkpoint round trip disappears."""
+    contract, e.g. from read_ivf_index) or a driver-side list of
+    (cid, cv) pairs (the Lloyd loop's state)."""
     import numpy as np
     import pandas as pd
 
     if isinstance(cents, DataFrame):
-        cent_rows = sorted(
-            ((r["cid"], r["cv"]) for r in cents.select("cid", "cv").collect()),
-            key=lambda t: t[0],
-        )
-    else:
-        cent_rows = sorted(cents, key=lambda t: t[0])
+        cents = [(r["cid"], r["cv"]) for r in cents.select("cid", "cv").collect()]
+    cent_rows = sorted(cents, key=lambda t: t[0])
     cids = np.array([c for c, _ in cent_rows], dtype=np.int64)
     cmat = np.asarray([cv for _, cv in cent_rows], dtype=np.float64)  # k × dim
-    c_sq = (cmat * cmat).sum(axis=1)
     n = min(n_take, len(cids))
 
     def _top_cids(vecs):
         if len(vecs) == 0:
             return pd.Series([], dtype=object)
-        v = np.vstack(vecs.to_numpy())
-        d2 = (v * v).sum(axis=1)[:, None] - 2.0 * (v @ cmat.T) + c_sq[None, :]
-        idx = np.argsort(d2, axis=1, kind="stable")[:, :n]
+        idx = _nearest(np.vstack(vecs.to_numpy()), cmat, n)
         return pd.Series([cids[row].tolist() for row in idx])
 
     top = F.pandas_udf(_top_cids, "array<long>")
     return vectors.select("*", F.explode(top(F.col(vec_col))).alias("cid"))
 
 
-def _assign_mean_partials(vectors: DataFrame, cents, vec_col: str) -> DataFrame:
-    """Fused Lloyd E+M step (r14): one Arrow pass assigns every vector
-    to its nearest centroid (the exact `_nearest_centroids` d² matmul +
-    first-minimum argmin) AND reduces each batch to per-(cid, dim)
-    partial sums. Output is (cid, pos, cnt, psum) — k·dim rows per
-    Arrow batch — so the only shuffle a Lloyd iteration pays is over
-    O(k·dim·n_batches) partials with map-side combine, not the
-    corpus·dim posexplode of the r13 shape. At 100 TB that retires a
-    64-128× row-inflation shuffle per iteration; the assignment itself
-    never leaves the task."""
+def _lloyd(g: Generations, train: DataFrame, m: int, n_codes: int, n_iters: int,
+           index: bool = False):
+    """Deterministic Lloyd k-means of every subspace at once → the
+    codebook ``{(s, code): centroid}`` and, with ``index``, the inverted
+    file.
+
+    ``train`` is (nid, nv), checkpointed here once because every
+    iteration re-reads it. Subspace s is the s-th of m equal contiguous
+    slices of nv, so m = 1 is plain k-means (IVF) and m > 1 trains
+    product-quantization codebooks. Code i starts as the vector with the
+    i-th lowest id (no RNG); the codebook then lives on the driver — it
+    is m·n_codes·subdim floats of index metadata.
+
+    An iteration is one Arrow pass that assigns each (vector, subspace)
+    to its nearest code (``_nearest``, the lower code wins ties) and
+    reduces the batch to (s, code, pos, cnt, psum) partial sums, so the
+    shuffle carries m·n_codes·subdim rows per batch whatever the corpus
+    size. The new centroid is round(Σpsum / Σcnt, 6): the round absorbs
+    the float reassociation of partial aggregates, which keeps training
+    bit-reproducible. The collect of those means is the iteration's one
+    action; an empty code keeps its previous centroid.
+
+    With ``index`` (m = 1) the last iteration first checkpoints the
+    assignment (nid, nv, cid) as the inverted file and takes its means
+    from that frame's cid, so the centroids are the means of exactly the
+    lists returned."""
     import numpy as np
     import pandas as pd
 
-    cent_rows = sorted(cents, key=lambda t: t[0])
-    cids = np.array([c for c, _ in cent_rows], dtype=np.int64)
-    cmat = np.asarray([cv for _, cv in cent_rows], dtype=np.float64)  # k × dim
-    c_sq = (cmat * cmat).sum(axis=1)
-    k, dim = cmat.shape
-
-    def _partials(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            v = np.vstack(pdf[vec_col].to_numpy())
-            d2 = (v * v).sum(axis=1)[:, None] - 2.0 * (v @ cmat.T) + c_sq[None, :]
-            ci = np.argmin(d2, axis=1)  # first minimum == stable-argsort head
-            sums = np.zeros((k, dim), dtype=np.float64)
-            np.add.at(sums, ci, v)  # unbuffered scatter-add, row order
-            cnts = np.bincount(ci, minlength=k)
-            present = np.flatnonzero(cnts)
-            yield pd.DataFrame(
-                {
-                    "cid": np.repeat(cids[present], dim),
-                    "pos": np.tile(np.arange(dim, dtype=np.int32), len(present)),
-                    "cnt": np.repeat(cnts[present], dim),
-                    "psum": sums[present].ravel(),
-                }
-            )
-
-    return vectors.mapInPandas(
-        _partials, "cid long, pos int, cnt long, psum double"
-    )
-
-
-def _mean_partials_from_assigned(
-    assigned: DataFrame, key_cols: list[str], vec_col: str
-) -> DataFrame:
-    """Per-batch (key..., pos, cnt, psum) partials over a frame that
-    already carries its cluster key(s) — the closing M-step over the
-    checkpointed final assignment (no re-assignment needed)."""
-    import numpy as np
-    import pandas as pd
-
-    def _partials(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            v = np.vstack(pdf[vec_col].to_numpy())
-            dim = v.shape[1]
-            keys = list(zip(*(pdf[kc] for kc in key_cols)))
-            uniq = sorted(set(keys))
-            idx = {key: j for j, key in enumerate(uniq)}
-            ki = np.array([idx[key] for key in keys], dtype=np.int64)
-            sums = np.zeros((len(uniq), dim), dtype=np.float64)
-            np.add.at(sums, ki, v)
-            cnts = np.bincount(ki, minlength=len(uniq))
-            cols = {
-                kc: np.repeat([key[j] for key in uniq], dim)
-                for j, kc in enumerate(key_cols)
-            }
-            cols["pos"] = np.tile(np.arange(dim, dtype=np.int32), len(uniq))
-            cols["cnt"] = np.repeat(cnts, dim)
-            cols["psum"] = sums.ravel()
-            yield pd.DataFrame(cols)
-
-    key_schema = ", ".join(f"{kc} long" for kc in key_cols)
-    return assigned.mapInPandas(
-        _partials, f"{key_schema}, pos int, cnt long, psum double"
-    )
-
-
-def _assemble_means(rows, key_cols=None, key_len: int | None = None) -> dict:
-    """Driver-side reassembly of collected (key..., pos, m) mean rows
-    into {key_tuple: [mean_0..mean_{dim-1}]} (replaces the old
-    collect_list/array_sort Spark-side assembly — the rows are
-    k·dim index metadata)."""
-    n_key = key_len if key_len is not None else len(key_cols)
-    by_key: dict = {}
-    for r in rows:
-        key = tuple(r[i] for i in range(n_key))
-        by_key.setdefault(key, []).append((r["pos"], r["m"]))
-    return {
-        key: [mv for _, mv in sorted(pairs)] for key, pairs in by_key.items()
+    train = g.ckpt(train)
+    seed = train.orderBy("nid").limit(n_codes).collect()
+    if not seed:
+        raise ValueError("no training vectors")
+    dim = len(seed[0]["nv"])
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible by m={m}")
+    sd, k = dim // m, len(seed)
+    book = {
+        (s, code): list(r["nv"][s * sd : (s + 1) * sd])
+        for code, r in enumerate(seed)
+        for s in range(m)
     }
+    indexed = None
+    for i in range(n_iters):
+        mats = [np.asarray([book[s, c] for c in range(k)], dtype=np.float64) for s in range(m)]
+        if index and i == n_iters - 1:
+            indexed = g.keep(g.ckpt(_nearest_centroids(
+                train, [(c, cv) for (_, c), cv in book.items()], "nv", 1
+            )))
+
+        def _partials(it):
+            for pdf in it:
+                if len(pdf) == 0:
+                    continue
+                v = np.vstack(pdf["nv"].to_numpy())
+                parts = []
+                for s, cmat in enumerate(mats):
+                    sv = v[:, s * sd : (s + 1) * sd]
+                    # the inverted file carries its assignment
+                    codes = pdf["cid"].to_numpy() if "cid" in pdf else _nearest(sv, cmat, 1)[:, 0]
+                    sums = np.zeros((k, sd), dtype=np.float64)
+                    np.add.at(sums, codes, sv)  # unbuffered scatter-add, row order
+                    cnts = np.bincount(codes, minlength=k)
+                    present = np.flatnonzero(cnts)
+                    parts.append(pd.DataFrame({
+                        "s": np.full(len(present) * sd, s, dtype=np.int32),
+                        "code": np.repeat(present, sd),
+                        "pos": np.tile(np.arange(sd, dtype=np.int32), len(present)),
+                        "cnt": np.repeat(cnts[present], sd),
+                        "psum": sums[present].ravel(),
+                    }))
+                yield pd.concat(parts, ignore_index=True)
+
+        means = (
+            (train if indexed is None else indexed)
+            .mapInPandas(_partials, "s int, code long, pos int, cnt long, psum double")
+            .groupBy("s", "code", "pos")
+            .agg(F.round(F.sum("psum") / F.sum("cnt"), 6).alias("m"))
+        )
+        new: dict = {}
+        for r in means.collect():
+            new.setdefault((r["s"], r["code"]), []).append((r["pos"], r["m"]))
+        for key, pairs in new.items():
+            book[key] = [x for _, x in sorted(pairs)]
+    return book, indexed
 
 
 def ivf_train_centroids(
@@ -389,15 +373,13 @@ def ivf_train_centroids(
 ) -> DataFrame:
     """Deterministic Lloyd's k-means → (cid, cv) centroid frame.
 
-    Init = the n_clusters lowest-id vectors (no RNG). Each update is
-    posexplode → per-(cid, dim) mean → re-assembled array; the mean is
-    rounded to 6 decimals so cross-partition float accumulation order
-    cannot perturb assignments between runs — the whole pipeline is
-    bit-reproducible. Empty clusters keep their previous centroid.
+    Init = the n_clusters lowest-id vectors (no RNG); means are rounded
+    to 6 decimals, so the whole pipeline is bit-reproducible; empty
+    clusters keep their previous centroid (see ``_lloyd``).
 
     Scale: assignment is corpus × k-broadcast (linear scans, no corpus
-    shuffle); the update shuffles (cid, dim) partial sums — map-side
-    combine makes the shuffle k·dim rows regardless of corpus size.
+    shuffle); the update shuffles (cid, dim) partial sums — k·dim rows
+    per Arrow batch regardless of corpus size.
     """
     cents, indexed = ivf_build_index(corpus, n_clusters, n_iters, id_col, vec_col)
     # cents is built from driver lists: nothing reads the inverted file
@@ -419,77 +401,17 @@ def ivf_build_index(
     ``cents`` are the means of exactly those lists (the closing M-step) —
     the standard IVF contract (lists = last assignment, centroids = their
     means). Probe-time consumers reuse ``indexed`` instead of re-scanning
-    and re-assigning the corpus, cutting one full corpus pass per query
-    batch vs rebuilding the assignment from the centroids.
+    and re-assigning the corpus.
 
     Scale: the checkpointed index is the materialized inverted file — at
     cluster scale this is the artifact you would persist to storage once
     and serve many query batches from.
     """
-    n_iters = max(1, n_iters)
+    train = corpus.select(F.col(id_col).alias("nid"), _as_double(F.col(vec_col)).alias("nv"))
     with Generations("ivf_build_index") as g:
-        # Checkpoint the loop-invariant training relation ONCE (the graph-
-        # loop edge-frame pattern): every Lloyd iteration maps the corpus
-        # vectors through _nearest_centroids, so an unmaterialized lineage
-        # would re-scan + re-project the corpus n_iters times.
-        c = g.ckpt(
-            corpus.select(F.col(id_col).alias("nid"), _as_double(F.col(vec_col)).alias("nv"))
-        )
-        # init = the n_clusters lowest ids. A k-row driver collect (k ≤ a few
-        # hundred — index-build metadata, not data) assigns cid 0..k-1 by id
-        # order.
-        #
-        # r14: centroid state lives DRIVER-SIDE between iterations (the
-        # pinned_lloyd / exact-replay precedent — centroids are k rows of
-        # index metadata, not data). The r13 shape paid, per iteration, one
-        # k-row collect, one k×k join, and one eager checkpoint action; now
-        # the M-step's updated.collect() is the iteration's ONLY action and
-        # the Python dict merge replicates the old left-join + coalesce
-        # (empty clusters keep their previous centroid) exactly. The Spark-
-        # side arithmetic — assignment matmul, round(avg, 6) means — is
-        # byte-for-byte the same plan, so assignments and means are
-        # unchanged.
-        init_rows = (
-            c.select("nid", "nv").orderBy("nid").limit(n_clusters).collect()
-        )
-        cent_list = [(i, list(r["nv"])) for i, r in enumerate(init_rows)]
-        indexed = None
-        for i in range(n_iters):
-            if i == n_iters - 1:
-                # Materialize the final assignment once: the closing M-step
-                # below AND every probe-time consumer read this checkpoint,
-                # so the corpus is assigned n_iters times total (previously
-                # n_iters + 1: ivf_topk re-ran _nearest_centroids over the
-                # whole corpus against the final centroids).
-                assigned = g.ckpt(_nearest_centroids(c, cent_list, "nv", "nid", 1))
-                indexed = g.keep(assigned)
-                partials = _mean_partials_from_assigned(
-                    assigned, ["cid"], "nv"
-                )
-            else:
-                # FUSED E+M step (r14, guide §4/§2): the same Arrow pass
-                # that argmins each batch also emits per-batch partial sums
-                # (cid, pos, cnt, psum) — k·dim rows per batch instead of
-                # corpus·dim exploded rows through the shuffle. Assignment
-                # arithmetic is _nearest_centroids' byte-for-byte (same d²
-                # matmul, argmin == stable-argsort head); the mean becomes
-                # round(Σ psum / Σ cnt, 6) instead of round(avg(val), 6) —
-                # the same double-accumulation class whose ordering noise
-                # the 6-decimal round exists to absorb (the old avg already
-                # reassociated freely across AQE partial aggregates).
-                partials = _assign_mean_partials(c, cent_list, "nv")
-            dims = partials.groupBy("cid", "pos").agg(
-                F.round(F.sum("psum") / F.sum("cnt"), 6).alias("m")
-            )
-            new_cv = _assemble_means(dims.collect(), key_cols=("cid",))
-            # empty clusters keep their previous centroid (the old left
-            # join's coalesce)
-            cent_list = [(cid, new_cv.get((cid,), cv)) for cid, cv in cent_list]
-    # the final `indexed` checkpoint is what consumers read; the scope
-    # frees the training relation's generation
-    spark = c.sparkSession
-    cents = spark.createDataFrame(
-        [(cid, cv) for cid, cv in cent_list], "cid int, cv array<double>"
+        book, indexed = _lloyd(g, train, 1, n_clusters, max(1, n_iters), index=True)
+    cents = corpus.sparkSession.createDataFrame(
+        [(cid, cv) for (_, cid), cv in sorted(book.items())], "cid int, cv array<double>"
     )
     return cents, indexed
 
@@ -557,7 +479,7 @@ def ivf_topk(
     q = queries.select(
         F.col(query_id_col).alias("qid"), _as_double(F.col(query_vec_col)).alias("qv")
     )
-    probes = _nearest_centroids(q, cents, "qv", "qid", n_probe)
+    probes = _nearest_centroids(q, cents, "qv", n_probe)
     cands = indexed.join(F.broadcast(probes), "cid").where(F.col("nid") != F.col("qid"))
     scored = cands.select(
         "qid", "nid", cosine_similarity(F.col("qv"), F.col("nv")).alias("cos")
@@ -571,11 +493,6 @@ def ivf_topk(
 
 
 # -- Product quantization (PQ / IVF-PQ) -------------------------------------
-
-
-def _pq_slices(vec_col, m: int, subdim: int):
-    """Split an array column into m contiguous subvectors (JVM slice)."""
-    return [F.slice(vec_col, s * subdim + 1, subdim) for s in range(m)]
 
 
 def _collect_codebooks(codebooks: DataFrame):
@@ -605,135 +522,25 @@ def pq_train_codebooks(
     """Train m per-subspace codebooks of n_codes centroids each
     (product quantization, Jégou et al. 2011) — returns (s, code, cv).
 
-    One JOINT Lloyd loop covers all m subspaces: the training relation
-    is (nid, s, subvector) — m rows per sampled vector — so each
-    iteration is one map-only assignment (per-subspace matmul inside an
-    Arrow batch) plus one (s, code, pos) mean shuffle whose size is
-    m·n_codes·subdim partials regardless of corpus size. Training
-    classically runs on a sample: ``sample_every=r`` keeps ids ≡ 0
-    (mod r) — deterministic, no RNG.
+    One JOINT Lloyd loop (``_lloyd``) covers all m subspaces: each
+    iteration is one map-side pass that slices every (nid, vector) row
+    into its m subvectors inside the Arrow batch, plus one (s, code,
+    pos) mean shuffle whose size is m·n_codes·subdim partials per batch
+    regardless of corpus size. Training classically runs on a sample:
+    ``sample_every=r`` keeps ids ≡ 0 (mod r) — deterministic, no RNG.
 
     Determinism mirrors ivf_build_index: lowest-id init, means rounded
-    to 6 decimals, stable argmin tie-break toward the lower code.
+    to 6 decimals, ties toward the lower code.
     """
-    import numpy as np
-    import pandas as pd
-
-    dim = len(corpus.select(vec_col).first()[0])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    subdim = dim // m
-
-    c = corpus.where((F.col(id_col) % sample_every) == 0).select(
+    train = corpus.where((F.col(id_col) % sample_every) == 0).select(
         F.col(id_col).alias("nid"), _as_double(F.col(vec_col)).alias("nv")
     )
-    sub = c.select(
-        "nid",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(s).alias("s"), sv.alias("sv"))
-                    for s, sv in enumerate(_pq_slices(F.col("nv"), m, subdim))
-                ]
-            )
-        ).alias("e"),
-    ).select("nid", F.col("e.s").alias("s"), F.col("e.sv").alias("sv"))
     with Generations("pq_train_codebooks") as g:
-        # loop-invariant training relation: checkpoint once (see
-        # ivf_build_index) — each joint-Lloyd iteration re-reads the
-        # exploded (nid, s, subvector) frame through mapInPandas
-        sub = g.ckpt(sub)
-
-        # r14: codebook state lives DRIVER-SIDE between iterations (see
-        # ivf_build_index — the m·k codebook rows are index metadata). Each
-        # iteration's ONLY action is the M-step collect; the dict merge
-        # replicates the old left-join + coalesce (empty codes keep their
-        # centroid) exactly, and the Spark-side assignment / round(avg, 6)
-        # arithmetic is unchanged.
-        init_rows = (
-            sub.where(
-                F.col("nid").isin(
-                    [r["nid"] for r in c.select("nid").orderBy("nid").limit(n_codes).collect()]
-                )
-            )
-            .select("nid", "s", "sv")
-            .collect()
-        )
-        id_rank = {nid: i for i, nid in enumerate(sorted({r["nid"] for r in init_rows}))}
-        book = {
-            (r["s"], id_rank[r["nid"]]): list(r["sv"]) for r in init_rows
-        }
-
-        def _book_rows():
-            return [(s, code, cv) for (s, code), cv in sorted(book.items())]
-
-        for _ in range(n_iters):
-            mats = [
-                np.asarray(
-                    [cv for (s2, _), cv in sorted(book.items()) if s2 == s],
-                    dtype=np.float64,
-                )
-                for s in range(m)
-            ]
-
-            # FUSED E+M step (r14, see _assign_mean_partials): the same
-            # Arrow pass that argmins each (s, subvector) batch also reduces
-            # it to per-(s, code, pos) partial sums — m·n_codes·subdim rows
-            # per batch instead of the sample·subdim posexplode through the
-            # shuffle. Assignment arithmetic is unchanged (same d² matmul,
-            # first-minimum argmin); the mean becomes round(Σ psum / Σ cnt,
-            # 6), the same double-accumulation class round-6 absorbs.
-            def _partials(it):
-                for pdf in it:
-                    if len(pdf) == 0:
-                        continue
-                    svs = np.vstack(pdf["sv"].to_numpy())
-                    subd = svs.shape[1]
-                    frames = []
-                    for s in range(m):
-                        mask = (pdf["s"] == s).to_numpy()
-                        if not mask.any():
-                            continue
-                        v = svs[mask]
-                        cmat = mats[s]
-                        d2 = (
-                            (v * v).sum(axis=1)[:, None]
-                            - 2.0 * (v @ cmat.T)
-                            + (cmat * cmat).sum(axis=1)[None, :]
-                        )
-                        codes = np.argmin(d2, axis=1)  # first (lowest) code wins ties
-                        sums = np.zeros((cmat.shape[0], subd), dtype=np.float64)
-                        np.add.at(sums, codes, v)
-                        cnts = np.bincount(codes, minlength=cmat.shape[0])
-                        present = np.flatnonzero(cnts)
-                        frames.append(
-                            pd.DataFrame(
-                                {
-                                    "s": np.full(len(present) * subd, s, dtype=np.int32),
-                                    "code": np.repeat(present, subd),
-                                    "pos": np.tile(
-                                        np.arange(subd, dtype=np.int32), len(present)
-                                    ),
-                                    "cnt": np.repeat(cnts[present], subd),
-                                    "psum": sums[present].ravel(),
-                                }
-                            )
-                        )
-                    if frames:
-                        yield pd.concat(frames, ignore_index=True)
-
-            partials = sub.mapInPandas(
-                _partials, "s int, code long, pos int, cnt long, psum double"
-            )
-            dims = partials.groupBy("s", "code", "pos").agg(
-                F.round(F.sum("psum") / F.sum("cnt"), 6).alias("m")
-            )
-            new_cv = _assemble_means(dims.collect(), key_len=2)
-            # empty codes keep their previous centroid (the old left join's
-            # coalesce)
-            book = {key: new_cv.get(key, cv) for key, cv in book.items()}
-    spark = corpus.sparkSession
-    return spark.createDataFrame(_book_rows(), "s int, code int, cv array<double>")
+        book, _ = _lloyd(g, train, m, n_codes, n_iters)
+    return corpus.sparkSession.createDataFrame(
+        [(s, code, cv) for (s, code), cv in sorted(book.items())],
+        "s int, code int, cv array<double>",
+    )
 
 
 def pq_encode(
@@ -755,10 +562,8 @@ def pq_encode(
     encoding for IVF-PQ composition.
     """
     import numpy as np
-    import pandas as pd
 
     mats = _collect_codebooks(codebooks)
-    m = len(mats)
     subdim = mats[0].shape[1]
     extra = list(keep_cols or [])
 
@@ -771,16 +576,10 @@ def pq_encode(
             if len(pdf) == 0:
                 continue
             v = np.vstack(pdf["nv"].to_numpy())
-            codes = np.empty((len(pdf), m), dtype=np.int64)
-            for s in range(m):
-                sv = v[:, s * subdim : (s + 1) * subdim]
-                cmat = mats[s]
-                d2 = (
-                    (sv * sv).sum(axis=1)[:, None]
-                    - 2.0 * (sv @ cmat.T)
-                    + (cmat * cmat).sum(axis=1)[None, :]
-                )
-                codes[:, s] = np.argmin(d2, axis=1)
+            codes = np.hstack([
+                _nearest(v[:, s * subdim : (s + 1) * subdim], cmat, 1)
+                for s, cmat in enumerate(mats)
+            ])
             out = pdf[["nid", *extra]].copy()
             out["codes"] = list(codes)
             yield out
@@ -799,7 +598,6 @@ def _adc_tables(queries: DataFrame, codebooks: DataFrame,
     qtab[s][code] = ||q_s − c_{s,code}||². Map-only over the (small)
     query batch; the scan side then needs only table lookups."""
     import numpy as np
-    import pandas as pd
 
     mats = _collect_codebooks(codebooks)
     m = len(mats)
@@ -828,6 +626,45 @@ def _adc_tables(queries: DataFrame, codebooks: DataFrame,
     return q.mapInPandas(_tabs, "qid long, qv array<double>, qtab array<array<double>>")
 
 
+def _adc_topk(pairs: DataFrame, qt: DataFrame, cvecs: DataFrame, k: int,
+              refine_factor: int) -> DataFrame:
+    """Rank (qid, nid, codes, qtab) candidate pairs by ADC distance.
+
+    The approximate distance is ``aggregate(zip_with(codes, qtab,
+    (c, t) → t[c]), 0.0, +)`` — whole-stage-codegen'd table lookups, no
+    Python. Without ``refine_factor`` this returns each query's top k
+    as (qid, nid, approx_d2, rank). With ``refine_factor=r`` the top
+    r·k are re-ranked by EXACT cosine against ``cvecs`` (nid, nv) and
+    the query vectors in ``qt`` → (qid, nid, cos, rank); the join back
+    to the full vectors touches only r·k·q rows."""
+    adc = F.aggregate(
+        F.zip_with("codes", "qtab", lambda c0, t: F.element_at(t, (c0 + 1).cast("int"))),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+    scored = pairs.where(F.col("nid") != F.col("qid")).select(
+        "qid", "nid", adc.alias("approx_d2")
+    )
+    w = W.partitionBy("qid").orderBy(F.col("approx_d2").asc(), F.col("nid").asc())
+    top = scored.withColumn("rank", F.row_number().over(w)).where(
+        F.col("rank") <= k * (refine_factor or 1)
+    )
+    if not refine_factor:
+        return top.select("qid", "nid", "approx_d2", "rank")
+    exact = (
+        top.select("qid", "nid")
+        .join(cvecs, "nid")
+        .join(F.broadcast(qt.select("qid", "qv")), "qid")
+        .select("qid", "nid", cosine_similarity(F.col("qv"), F.col("nv")).alias("cos"))
+    )
+    w2 = W.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid").asc())
+    return (
+        exact.withColumn("rank", F.row_number().over(w2))
+        .where(F.col("rank") <= k)
+        .select("qid", "nid", "cos", "rank")
+    )
+
+
 def pq_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -846,16 +683,14 @@ def pq_topk(
     """PQ approximate top-k by asymmetric distance (ADC scan).
 
     The scan is pure JVM: compressed codes crossJoin the broadcast
-    query batch (each query carrying its distance tables) and the
-    approximate distance is ``aggregate(zip_with(codes, qtab,
-    (c, t) → t[c]), 0.0, +)`` — whole-stage-codegen'd table lookups, no
-    Python anywhere in the corpus-sized path. Cost per (query, vector)
-    is m array lookups on m·8 bytes of data — the classic PQ trade:
-    exhaustive scans over 32×-compressed codes.
+    query batch (each query carrying its distance tables) and
+    ``_adc_topk`` scores each pair by table lookups. Cost per (query,
+    vector) is m array lookups on m·8 bytes of data — the classic PQ
+    trade: exhaustive scans over 32×-compressed codes.
 
     ``refine_factor=r`` re-ranks the top r·k ADC candidates per query
     with EXACT cosine against the uncompressed vectors (two-stage
-    retrieval): the join back to ``corpus`` touches only r·k·q rows.
+    retrieval).
 
     Pass prebuilt ``codebooks``/``codes`` to serve from an existing
     index ("build once, serve many"); otherwise both are trained and
@@ -872,42 +707,9 @@ def pq_topk(
     if codes is None:
         codes = pq_encode(corpus, codebooks, id_col=id_col, vec_col=vec_col)
     qt = _adc_tables(queries, codebooks, query_id_col, query_vec_col)
-
-    adc = F.aggregate(
-        F.zip_with("codes", "qtab", lambda c0, t: F.element_at(t, (c0 + 1).cast("int"))),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    scored = (
-        codes.crossJoin(F.broadcast(qt.select("qid", "qtab")))
-        .where(F.col("nid") != F.col("qid"))
-        .select("qid", "nid", adc.alias("approx_d2"))
-    )
-    w = W.partitionBy("qid").orderBy(F.col("approx_d2").asc(), F.col("nid").asc())
-    n_keep = k * refine_factor if refine_factor else k
-    top = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= n_keep)
-    )
-    if not refine_factor:
-        return top.select("qid", "nid", "approx_d2", "rank")
-
-    cvecs = corpus.select(
-        F.col(id_col).alias("nid"), _as_double(F.col(vec_col)).alias("nv")
-    )
-    qvecs = qt.select("qid", "qv")
-    exact = (
-        top.select("qid", "nid")
-        .join(cvecs, "nid")
-        .join(F.broadcast(qvecs), "qid")
-        .select("qid", "nid", cosine_similarity(F.col("qv"), F.col("nv")).alias("cos"))
-    )
-    w2 = W.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid").asc())
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select("qid", "nid", "cos", "rank")
-    )
+    pairs = codes.crossJoin(F.broadcast(qt.select("qid", "qtab")))
+    cvecs = corpus.select(F.col(id_col).alias("nid"), _as_double(F.col(vec_col)).alias("nv"))
+    return _adc_topk(pairs, qt, cvecs, k, refine_factor)
 
 
 def ivf_pq_topk(
@@ -932,9 +734,9 @@ def ivf_pq_topk(
     Per query the probed buckets bound the candidate set (n_probe /
     n_clusters of the corpus on average); those candidates are scored
     via the JVM ADC expression on 8-byte-per-subspace codes; the top
-    refine_factor·k survivors are re-ranked with exact cosine. At
-    100 TB the uncompressed corpus is read twice ever (IVF build,
-    PQ encode); query batches touch codes + probed lists + r·k·q
+    refine_factor·k survivors (at least k) are re-ranked with exact
+    cosine. At 100 TB the uncompressed corpus is read twice ever (IVF
+    build, PQ encode); query batches touch codes + probed lists + r·k·q
     full vectors.
     """
     cents, indexed = ivf_build_index(
@@ -953,38 +755,12 @@ def ivf_pq_topk(
         queries.select(
             F.col(query_id_col).alias("qid"), _as_double(F.col(query_vec_col)).alias("qv")
         ),
-        cents, "qv", "qid", n_probe,
+        cents, "qv", n_probe,
     ).select("qid", "cid")
-
-    adc = F.aggregate(
-        F.zip_with("codes", "qtab", lambda c0, t: F.element_at(t, (c0 + 1).cast("int"))),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+    pairs = coded.join(F.broadcast(probes), "cid").join(
+        F.broadcast(qt.select("qid", "qtab")), "qid"
     )
-    cand = (
-        coded.join(F.broadcast(probes), "cid")
-        .join(F.broadcast(qt.select("qid", "qtab")), "qid")
-        .where(F.col("nid") != F.col("qid"))
-        .select("qid", "nid", adc.alias("approx_d2"))
-    )
-    w = W.partitionBy("qid").orderBy(F.col("approx_d2").asc(), F.col("nid").asc())
-    top = cand.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k * max(1, refine_factor)
-    )
-    cvecs = indexed.select("nid", "nv")
-    qvecs = qt.select("qid", "qv")
-    exact = (
-        top.select("qid", "nid")
-        .join(cvecs, "nid")
-        .join(F.broadcast(qvecs), "qid")
-        .select("qid", "nid", cosine_similarity(F.col("qv"), F.col("nv")).alias("cos"))
-    )
-    w2 = W.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("nid").asc())
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select("qid", "nid", "cos", "rank")
-    )
+    return _adc_topk(pairs, qt, indexed.select("nid", "nv"), k, max(1, refine_factor))
 
 
 def embedding_covariance(

@@ -12,8 +12,10 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
+from datetime import datetime, timezone
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -320,6 +322,35 @@ def _host_calibration(spark=None) -> dict[str, float]:
     return out
 
 
+def _commit() -> str | None:
+    """The checkout's HEAD commit, or None where git cannot tell."""
+    try:
+        out = subprocess.run(
+            ["git", "rev-parse", "HEAD"],
+            cwd=os.path.dirname(os.path.abspath(__file__)),
+            capture_output=True, text=True, check=True,
+        )
+    except (OSError, subprocess.CalledProcessError):
+        return None
+    return out.stdout.strip() or None
+
+
+def _record(times: dict[str, float], sf: float, calibration: dict, cpus: int) -> dict:
+    """The bench_last.json / bench_full.json record: every measured
+    query plus where the numbers came from (commit, CPUs, UTC time)."""
+    return {
+        "metric": "headline_queries_total_wall",
+        "value": round(sum(times.values()), 3),
+        "unit": "sec",
+        "queries": times,
+        "sf": sf,
+        "calibration": calibration,
+        "commit": _commit(),
+        "cpus": cpus,
+        "timestamp": datetime.now(timezone.utc).isoformat(timespec="seconds"),
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
@@ -353,16 +384,8 @@ def main() -> None:
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             best = min(best, time.perf_counter() - t0)
         times[name] = round(best, 3)
-    total = round(sum(times.values()), 3)
     calibration = _host_calibration(spark)
-    full = {
-        "metric": "headline_queries_total_wall",
-        "value": total,
-        "unit": "sec",
-        "queries": times,
-        "sf": sf,
-        "calibration": calibration,
-    }
+    full = _record(times, sf, calibration, spark.sparkContext.defaultParallelism)
     # Full per-query detail beside the script (all HEADLINE names);
     # the printed line carries the size-capped PRINTED subset only.
     # Every run writes bench_last.json (gitignored scratch). The

@@ -40,8 +40,7 @@ ALLOWED: dict[tuple[str, str], tuple[int, str]] = {
     ("llm/tokenize.py", "read_bpe_vocab"): (1, "persisted vocab table — vocab_size-bounded by the training contract"),
     ("llm/similarity.py", "quantization_params"): (1, "one (min,max) row per embedding DIMENSION — dim-bounded codebook metadata"),
     ("llm/similarity.py", "_nearest_centroids"): (1, "k centroid vectors — index metadata re-entered as literals"),
-    ("llm/similarity.py", "ivf_build_index"): (2, "limit(n_clusters) seed vectors + per-iteration (cid, pos) means — both k·dim index metadata (r14 driver-side Lloyd state)"),
-    ("llm/similarity.py", "pq_train_codebooks"): (3, "limit(n_codes) seed ids + their m subvectors + per-iteration (s, code, pos) means — all m·n_codes·subdim codebook metadata (r14 driver-side Lloyd state)"),
+    ("llm/similarity.py", "_lloyd"): (2, "limit(n_codes) seed vectors + per-iteration (s, code, pos) means — k·dim centroids for IVF, m·n_codes·subdim codebook entries for PQ (driver-side Lloyd state)"),
     ("llm/similarity.py", "_collect_codebooks"): (1, "n_subspaces x n_codes codebook vectors — index metadata"),
     ("sources/flight_sql.py", "do_put"): (2, "DML execution trigger (ExecuteUpdate): Spark SQL command frames are empty/row-count-sized — collect() is the action, not a data pull"),
     ("sources/bloom_index.py", "point_lookup"): (1, "bloom-admitted (file, row_group) candidates — file-METADATA-scale, the pruning index's output"),

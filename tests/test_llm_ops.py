@@ -369,6 +369,29 @@ def test_ivf_centroids_deterministic(spark):
     assert a == b and len(a) == 4
 
 
+def test_ivf_build_index_golden(spark):
+    # bit-level pin of the centroids and the inverted file: two runs
+    # agreeing with each other would not catch a drift in the arithmetic
+    import hashlib
+
+    from arrow_spark.llm.similarity import ivf_build_index
+
+    df = spark.createDataFrame(
+        _clustered_vectors(), "vec_id long, embedding array<double>, label int"
+    )
+    cents, indexed = ivf_build_index(df, n_clusters=4, n_iters=3)
+
+    def sha(rows):
+        return hashlib.sha256(repr(sorted(rows)).encode()).hexdigest()
+
+    assert sha((r.cid, tuple(r.cv)) for r in cents.collect()) == (
+        "fff685aa12281509cf4a423a32dcfa63d71a3c7e201c5b6a660fd67941a409da"
+    )
+    assert sha((r.nid, r.cid) for r in indexed.collect()) == (
+        "bab76e06fa04a4345ed840568887385116c3d98542c3d6449c400be3df2e9825"
+    )
+
+
 def test_ivf_centroids_frees_the_inverted_file(spark):
     # the centroids come from driver lists, so no persisted generation
     # (training relation or inverted file) outlives the call

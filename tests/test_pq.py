@@ -3,6 +3,7 @@ vs brute force (with and without exact re-rank), IVF-PQ composition."""
 
 from __future__ import annotations
 
+import hashlib
 import math
 
 import pytest
@@ -10,6 +11,7 @@ from pyspark.sql import functions as F
 
 from arrow_spark.llm.similarity import (
     brute_force_topk,
+    ivf_build_index,
     ivf_pq_topk,
     pq_encode,
     pq_topk,
@@ -45,6 +47,30 @@ def test_codebooks_shape_and_determinism(spark, vecs):
     assert all(len(cv) == 2 for cv in rows_a.values())  # dim 8 / m 4
 
 
+def _sha(rows):
+    return hashlib.sha256(repr(sorted(rows)).encode()).hexdigest()
+
+
+def test_codebooks_golden(spark, vecs):
+    # bit-level pin: two runs agreeing with each other would not catch a
+    # drift in the training arithmetic
+    cb = pq_train_codebooks(vecs, m=4, n_codes=4, n_iters=2)
+    assert _sha((r.s, r.code, tuple(r.cv)) for r in cb.collect()) == (
+        "ee50f0e407be39a3ebe89ad14f1b2c08da794adfe9ce431c67ef88d7ed9c9a61"
+    )
+
+
+def test_training_job_counts(spark, vecs, jobs_run):
+    # IVF: checkpoint + seed + 2 jobs per iteration (map stage + collect)
+    # + the checkpointed inverted file. PQ: checkpoint + seed + 2 per
+    # iteration — the seed is one collect that also gives the dim.
+    with jobs_run() as ivf_jobs:
+        ivf_build_index(vecs, n_clusters=4, n_iters=3)
+    with jobs_run() as pq_jobs:
+        pq_train_codebooks(vecs, m=4, n_codes=4, n_iters=2)
+    assert (len(ivf_jobs), len(pq_jobs)) == (9, 6)
+
+
 def test_encode_codes_in_range(spark, vecs):
     cb = pq_train_codebooks(vecs, m=4, n_codes=4, n_iters=2)
     coded = pq_encode(vecs, cb)
@@ -58,6 +84,11 @@ def test_encode_codes_in_range(spark, vecs):
 def test_dim_not_divisible_raises(spark, vecs):
     with pytest.raises(ValueError, match="not divisible"):
         pq_train_codebooks(vecs, m=3, n_codes=4, n_iters=1)
+
+
+def test_empty_training_sample_raises(spark, vecs):
+    with pytest.raises(ValueError, match="no training vectors"):
+        pq_train_codebooks(vecs.where(F.col("vec_id") < 0), m=4, n_codes=4, n_iters=1)
 
 
 def _recall(spark, vecs, approx_rows, k=5):
