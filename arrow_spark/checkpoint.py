@@ -53,7 +53,7 @@ Spark-native extension, so this hazard has no reference analog.
 
 from __future__ import annotations
 
-from py4j.protocol import Py4JError
+from py4j.protocol import Py4JError, Py4JJavaError
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
@@ -162,7 +162,8 @@ def _rebuild(ck: DataFrame, measure: bool) -> DataFrame:
         raise RuntimeError(
             "ckpt_reset_stats: the private Spark APIs it relies on "
             "(LogicalRDD.copy / Statistics / Dataset.ofRows / "
-            "SparkContext.getRDDStorageInfo, verified on PySpark 4.1.2) "
+            "SparkContext.getRDDStorageInfo / listenerBus, verified on "
+            "PySpark 4.1.2) "
             "failed — a Spark upgrade likely changed them. Without the "
             "stats reset, join-bearing iterative loops compound size "
             "estimates to BigInteger overflow at planning time; fix this "
@@ -177,14 +178,26 @@ def _rebuild(ck: DataFrame, measure: bool) -> DataFrame:
 
 def _stored_bytes(spark, rdd) -> int | None:
     """Bytes the persisted ``rdd`` occupies in memory and on disk, or
-    None until every partition's block is reported: the storage status
-    is fed by the listener bus, and a partial sum would understate a
-    generation into a broadcast. An RDD without partitions stores none."""
+    None until every partition's block is reported: a partial sum would
+    understate a generation into a broadcast. The storage status is fed
+    by the listener bus, which can still hold the block updates of the
+    action that just materialized ``rdd`` (seen on a loaded host), so a
+    read that finds the generation incomplete drains the bus and reads
+    once more. An RDD without partitions stores none."""
     rdd_id, parts = rdd.id(), rdd.getNumPartitions()
-    for info in spark.sparkContext._jsc.sc().getRDDStorageInfo():
-        if info.id() == rdd_id and info.numCachedPartitions() == parts:
-            return info.memSize() + info.diskSize()
-    return 0 if parts == 0 else None
+    if parts == 0:
+        return 0
+    sc = spark.sparkContext._jsc.sc()
+    for drained in (False, True):
+        if drained:
+            try:
+                sc.listenerBus().waitUntilEmpty()
+            except Py4JJavaError:  # the bus stayed busy past its timeout
+                return None
+        for info in sc.getRDDStorageInfo():
+            if info.id() == rdd_id and info.numCachedPartitions() == parts:
+                return info.memSize() + info.diskSize()
+    return None
 
 
 def _statistics(jvm, size: int):
@@ -277,6 +290,14 @@ class Generations:
         """Free an owned generation now (no-op for any other frame)."""
         if self._owned.pop(id(frame), None) is not None:
             ckpt_release(frame)
+
+    def count(self, df: DataFrame) -> tuple[DataFrame, int]:
+        """``(generation, rows)``: a lazy generation of ``df`` whose
+        ``count()`` is the action that materializes it, sized afterwards
+        — one job where an eager checkpoint and a count are two."""
+        lazy = self.ckpt(df, eager=False)
+        rows = lazy.count()
+        return self._measured(lazy), rows
 
     def _measured(self, frame: DataFrame) -> DataFrame:
         """The owned lazy generation ``frame``, materialized since, as a

@@ -729,9 +729,13 @@ def connected_components(
       * so the round maps the star to itself, and stars never interact.
     Each round connects the same vertices as its input, so every star
     is a whole component and its center the component minimum. The
-    test is one aggregation over the round's output and is the round's
-    only Spark action. ``max_iter`` counts rounds including the one
-    that finds the star forest; no confirmation round follows it.
+    test is one aggregation over the round's output, read with
+    ``isEmpty``: its shuffle computes and persists every partition of
+    the round's lazy generation, and its take stops at the first
+    violation instead of counting them all (one job when AQE coalesces
+    the aggregate to one partition). ``max_iter`` counts rounds
+    including the one that finds the star forest; no confirmation round
+    follows it.
 
     Scale notes: the canonical edge frame is checkpointed once (the
     possibly-expensive pair-generation lineage is computed exactly
@@ -787,13 +791,14 @@ def connected_components(
         roles = new.select(F.col("u").alias("x"), F.lit(0).alias("child")).union(
             new.select(F.col("v").alias("x"), F.lit(1).alias("child"))
         )
-        violations = (
+        # isEmpty's take may stop at the aggregate's first partition, but
+        # the shuffle under it reads every partition of the generation
+        return (
             roles.groupBy("x")
             .agg(F.sum("child").alias("c"), F.count("*").alias("k"))
             .where((F.col("c") > 0) & (F.col("k") > 1))
-            .count()
+            .isEmpty()
         )
-        return violations == 0
 
     with Generations("connected_components") as g:
         # one materialization of the pair-generation lineage; vertices
@@ -809,8 +814,8 @@ def connected_components(
         cur = ec.where(F.col("u") != F.col("v")).select(
             F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
         )
-        # LAZY checkpoint + test-as-materializer (r14): the star-forest
-        # count is the round's ONE action — it computes the round and
+        # LAZY checkpoint + test-as-materializer: the star-forest
+        # test is the round's ONE action — it computes the round and
         # persists the generation, and only then is the predecessor
         # released. Raises when max_iter rounds pass without a star
         # forest; the scope frees every generation on the way out.

@@ -241,6 +241,25 @@ def _nearest(v, cmat, n: int):
     return np.argsort(d2, axis=1, kind="stable")[:, :n]
 
 
+def _index_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """The index metadata ``rows`` a trainer built on the driver, as a
+    frame that carries them: ``_index_rows`` reads them back without a
+    Spark job."""
+    frame = spark.createDataFrame(rows, schema)
+    frame._index_rows = rows
+    return frame
+
+
+def _index_rows(frame: DataFrame, *cols: str) -> list[tuple]:
+    """The ``cols`` tuples of an index metadata frame: the driver rows of
+    an ``_index_frame``, else one collect (a persisted index or a user
+    frame)."""
+    rows = getattr(frame, "_index_rows", None)
+    if rows is None:
+        rows = [tuple(r) for r in frame.select(*cols).collect()]
+    return rows
+
+
 def _nearest_centroids(vectors: DataFrame, cents, vec_col: str, n_take: int) -> DataFrame:
     """Attach the n_take nearest centroid ids to each vector row.
 
@@ -261,7 +280,7 @@ def _nearest_centroids(vectors: DataFrame, cents, vec_col: str, n_take: int) -> 
     import pandas as pd
 
     if isinstance(cents, DataFrame):
-        cents = [(r["cid"], r["cv"]) for r in cents.select("cid", "cv").collect()]
+        cents = _index_rows(cents, "cid", "cv")
     cent_rows = sorted(cents, key=lambda t: t[0])
     cids = np.array([c for c, _ in cent_rows], dtype=np.int64)
     cmat = np.asarray([cv for _, cv in cent_rows], dtype=np.float64)  # k × dim
@@ -410,8 +429,10 @@ def ivf_build_index(
     train = corpus.select(F.col(id_col).alias("nid"), _as_double(F.col(vec_col)).alias("nv"))
     with Generations("ivf_build_index") as g:
         book, indexed = _lloyd(g, train, 1, n_clusters, max(1, n_iters), index=True)
-    cents = corpus.sparkSession.createDataFrame(
-        [(cid, cv) for (_, cid), cv in sorted(book.items())], "cid int, cv array<double>"
+    cents = _index_frame(
+        corpus.sparkSession,
+        [(cid, cv) for (_, cid), cv in sorted(book.items())],
+        "cid int, cv array<double>",
     )
     return cents, indexed
 
@@ -495,15 +516,14 @@ def ivf_topk(
 # -- Product quantization (PQ / IVF-PQ) -------------------------------------
 
 
-def _collect_codebooks(codebooks: DataFrame):
+def _codebook_mats(codebooks: DataFrame):
     """(s, code, cv) frame → list of k×subdim numpy matrices, one per
     subspace, codes sorted ascending. Index METADATA (m·k rows)."""
     import numpy as np
 
-    rows = codebooks.select("s", "code", "cv").collect()
     by_s: dict[int, list] = {}
-    for r in rows:
-        by_s.setdefault(r["s"], []).append((r["code"], r["cv"]))
+    for s, code, cv in _index_rows(codebooks, "s", "code", "cv"):
+        by_s.setdefault(s, []).append((code, cv))
     return [
         np.asarray([cv for _, cv in sorted(by_s[s])], dtype=np.float64)
         for s in sorted(by_s)
@@ -537,7 +557,8 @@ def pq_train_codebooks(
     )
     with Generations("pq_train_codebooks") as g:
         book, _ = _lloyd(g, train, m, n_codes, n_iters)
-    return corpus.sparkSession.createDataFrame(
+    return _index_frame(
+        corpus.sparkSession,
         [(s, code, cv) for (s, code), cv in sorted(book.items())],
         "s int, code int, cv array<double>",
     )
@@ -563,7 +584,7 @@ def pq_encode(
     """
     import numpy as np
 
-    mats = _collect_codebooks(codebooks)
+    mats = _codebook_mats(codebooks)
     subdim = mats[0].shape[1]
     extra = list(keep_cols or [])
 
@@ -599,7 +620,7 @@ def _adc_tables(queries: DataFrame, codebooks: DataFrame,
     query batch; the scan side then needs only table lookups."""
     import numpy as np
 
-    mats = _collect_codebooks(codebooks)
+    mats = _codebook_mats(codebooks)
     m = len(mats)
     subdim = mats[0].shape[1]
 

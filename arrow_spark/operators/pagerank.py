@@ -8,10 +8,16 @@ contract as `llm/dedup.connected_components` and the IVF Lloyd loop):
     rank_{i+1}(n) = (1-d)/N + d * ( Σ_{(s→n)} rank_i(s)·w/out(s)
                                     + dangling_i / N )
 
-Scale anatomy per iteration (what survives a 1000-executor graph):
-- contributions: ranks ⋈ edges on src (shuffle ∝ edges), groupBy dst
-  (second shuffle, map-side combined) — the classic 2-shuffle PR step;
-- dangling mass: an anti-join + single-row sum, broadcast back;
+Scale anatomy per iteration (the Pregel/GraphX round shape):
+- messages: edges ⋈ ranks on src, each edge sending r·w/out(src) to
+  its dst (the ranks generation is broadcast while its stored size is
+  under the broadcast threshold, a shuffle join above it);
+- one keyed aggregation on the node: every node's own rank row (its
+  carry columns, no message) and the messages addressed to it meet in
+  one map-side-combined groupBy — the state is never joined back onto
+  an aggregate, so only the messages are shuffled;
+- dangling mass: a filtered single-row sum over the ranks, broadcast
+  back;
 - NO driver-side graph state: ranks stay a DataFrame, the driver loop
   holds only the plan. localCheckpoint truncates lineage each round
   (the connected-components lesson: nested iteration plans compile
@@ -92,8 +98,8 @@ def personalized_pagerank(
 
     Differences from the global walk, all three localized to the seeds:
     start mass = uniform over S; restart mass (1−d) goes to S only;
-    dangling mass returns to S only. Everything else — the 2-shuffle
-    contribution round, per-iteration 1e-9 snapping (which is what
+    dangling mass returns to S only. Everything else — the message
+    aggregation round, per-iteration 1e-9 snapping (which is what
     makes the unrolled-CTE oracle bit-exact), localCheckpoint lineage
     cuts — is the pagerank machinery unchanged. Seeds are broadcast
     (seed sets are query-sized, not graph-sized).
@@ -147,13 +153,13 @@ def _walk(
             .agg(F.max("has_out").alias("has_out"))
         )
         carry = ["n", "has_out"]
-        # N as a driver-side literal (r14): the node (or seed) count is
-        # loop-invariant scalar metadata; the old shape paid a
-        # crossJoin(broadcast(cnt)) per round. tele/N below is the same
-        # IEEE double division the old column form performed.
+        # N as a driver-side literal: the node (or seed) count is
+        # loop-invariant scalar metadata, not a per-round
+        # crossJoin(broadcast(cnt)); tele/N below is the same IEEE double
+        # division that column form performed. The node count is the
+        # action that materializes the lazy nodes generation.
         if sources is None:
-            nodes = g.ckpt(nodes)
-            count = nodes.count()
+            nodes, count = g.count(nodes)
             tele = F.lit(1.0)
         else:
             s = sources.select(F.col(sources.columns[0]).alias("n")).distinct()
@@ -170,32 +176,39 @@ def _walk(
         n = F.lit(float(count))
 
         def step(ranks: DataFrame, _: int) -> DataFrame:
-            contrib = (
-                e.join(ranks, e.src == ranks.n)
-                .groupBy("dst")
-                .agg(F.sum(F.col("r") * F.col("w") / F.col("ow")).alias("s"))
+            # one keyed aggregation per round: every node's own row (the
+            # carry columns, no message) meets the messages r·w/ow sent
+            # along its in-edges (no carry); nodes without in-edges sum
+            # to null
+            msgs = e.join(ranks, e.src == ranks.n).select(
+                F.col("dst").alias("n"),
+                *[F.lit(None).alias(c) for c in carry[1:]],
+                (F.col("r") * F.col("w") / F.col("ow")).alias("c"),
+            )
+            agg = (
+                ranks.select(*carry, F.lit(None).cast("double").alias("c"))
+                .unionByName(msgs)
+                .groupBy("n")
+                .agg(*[F.max(c).alias(c) for c in carry[1:]], F.sum("c").alias("s"))
             )
             dang = (
                 ranks.where(F.col("has_out") == 0)
                 .agg(F.coalesce(F.sum("r"), F.lit(0.0)).alias("d"))
             )
-            return (
-                ranks.crossJoin(F.broadcast(dang))
-                .join(contrib, ranks.n == contrib.dst, "left")
-                .select(
-                    *carry,
-                    _snap9(
-                        (1 - F.lit(damping)) * tele / n
-                        + F.lit(damping)
-                        * (F.coalesce(F.col("s"), F.lit(0.0)) + F.col("d") * tele / n)
-                    ).alias("r"),
-                )
+            return agg.crossJoin(F.broadcast(dang)).select(
+                *carry,
+                _snap9(
+                    (1 - F.lit(damping)) * tele / n
+                    + F.lit(damping)
+                    * (F.coalesce(F.col("s"), F.lit(0.0)) + F.col("d") * tele / n)
+                ).alias("r"),
             )
 
         # Loop-carried state goes through the stats-reset checkpoint, not
-        # bare localCheckpoint: the per-round plan joins ranks back into
-        # itself, so preserved origin-size estimates would compound
-        # multiplicatively until BigInteger overflow at planning time
+        # bare localCheckpoint: each round joins ranks to the edges and
+        # aggregates the result with ranks, so preserved origin-size
+        # estimates would compound multiplicatively until BigInteger
+        # overflow at planning time
         # (proven in the CC loop at gen-sf3 round ~25 — see
         # arrow_spark/checkpoint.py). Generation 0 is a plain projection
         # over the `nodes` checkpoint — the first round materializes it
@@ -219,10 +232,11 @@ def hits(
     separates "points at good pages" from "is pointed at").
 
     Same relational iteration discipline as pagerank: each half-step is
-    one edge⋈scores shuffle + a group-sum, every score snaps to 1e-9
-    before the next step (what makes the unrolled-CTE oracle replay
-    bit-exact), localCheckpoint truncates lineage per round. The L1
-    norm is a 1-row broadcast aggregate. Nodes outside the update's
+    one edge⋈scores message join + one keyed aggregation of the scores
+    with their messages, every score snaps to 1e-9 before the next step
+    (what makes the unrolled-CTE oracle replay bit-exact), and
+    localCheckpoint truncates lineage per round. The L1 norm is a 1-row
+    broadcast aggregate. Nodes outside the update's
     support (no in-edges / no out-edges) hold score 0 — they stay in
     the output, zero-valued, like pagerank's dangling handling.
 
@@ -233,14 +247,13 @@ def hits(
         # loop-invariant edge frame: checkpoint once (see _walk) — HITS
         # re-joins it twice per round (authority and hub half-steps)
         e = g.ckpt(e)
-        nodes = g.ckpt(
+        # N as a driver-side literal (see _walk): 1.0/N is the same IEEE
+        # double division a crossJoin(broadcast(cnt)) would perform
+        nodes, n_nodes = g.count(
             e.select(F.col("src").alias("n"))
             .union(e.select(F.col("dst").alias("n")))
             .distinct()
         )
-        # N as a driver-side literal (r14, see _walk): 1.0/N is the same
-        # IEEE double division the old crossJoin(broadcast(cnt)) performed
-        n_nodes = nodes.count()
         # loop-carried → stats-reset checkpoint (see _walk); generation 0
         # is a projection over the nodes checkpoint
         scores = nodes.select(
@@ -260,31 +273,26 @@ def hits(
             ).select("n", "a", "h")
 
         def half_step(scores: DataFrame, i: int) -> DataFrame:
-            # r14: the loop-carried score frame IS the node universe (one
-            # row per node, invariant), so each half-step left-joins the
-            # new raw scores straight onto it — the r13 shape paid two
-            # joins per half-step (nodes⋈new, then ⋈scores to re-attach
-            # the other column). Even half-steps update authorities, odd
-            # ones hubs, each checkpointed on its own.
-            if i % 2 == 0:
-                a_new = (
-                    e.join(scores, e.src == scores.n)
-                    .groupBy("dst")
-                    .agg(_snap9(F.sum("h")).alias("a_raw"))
-                )
-                nxt = scores.join(a_new, scores.n == a_new.dst, "left").select(
-                    "n", F.coalesce(F.col("a_raw"), F.lit(0.0)).alias("a"), "h"
-                )
-                return _norm(nxt, "a")
-            h_new = (
-                e.join(scores.select(F.col("n").alias("dn"), "a"), e.dst == F.col("dn"))
-                .groupBy("src")
-                .agg(_snap9(F.sum("a")).alias("h_raw"))
+            # even half-steps update authorities from the hubs pointing in,
+            # odd ones hubs from the authorities pointed at. One keyed
+            # aggregation: every node's own row carries the untouched score
+            # (no message), each edge sends the other score (no carry)
+            new, old, by, to = (
+                ("a", "h", "src", "dst") if i % 2 == 0 else ("h", "a", "dst", "src")
             )
-            nxt = scores.join(h_new, scores.n == h_new.src, "left").select(
-                "n", "a", F.coalesce(F.col("h_raw"), F.lit(0.0)).alias("h")
+            msgs = e.join(scores, e[by] == scores.n).select(
+                F.col(to).alias("n"), F.lit(None).alias(old), F.col(old).alias("x")
             )
-            return _norm(nxt, "h")
+            nxt = (
+                scores.select("n", old, F.lit(None).cast("double").alias("x"))
+                .unionByName(msgs)
+                .groupBy("n")
+                .agg(
+                    F.max(old).alias(old),
+                    F.coalesce(_snap9(F.sum("x")), F.lit(0.0)).alias(new),
+                )
+            )
+            return _norm(nxt, new)
 
         scores = g.keep(g.iterate(scores, half_step, 2 * max(1, n_iters)))
     return scores.select(

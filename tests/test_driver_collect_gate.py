@@ -39,9 +39,8 @@ ALLOWED: dict[tuple[str, str], tuple[int, str]] = {
     ("llm/tokenize.py", "bpe_train"): (1, "limit(1) argmax — the per-round best merge pair, one row"),
     ("llm/tokenize.py", "read_bpe_vocab"): (1, "persisted vocab table — vocab_size-bounded by the training contract"),
     ("llm/similarity.py", "quantization_params"): (1, "one (min,max) row per embedding DIMENSION — dim-bounded codebook metadata"),
-    ("llm/similarity.py", "_nearest_centroids"): (1, "k centroid vectors — index metadata re-entered as literals"),
     ("llm/similarity.py", "_lloyd"): (2, "limit(n_codes) seed vectors + per-iteration (s, code, pos) means — k·dim centroids for IVF, m·n_codes·subdim codebook entries for PQ (driver-side Lloyd state)"),
-    ("llm/similarity.py", "_collect_codebooks"): (1, "n_subspaces x n_codes codebook vectors — index metadata"),
+    ("llm/similarity.py", "_index_rows"): (1, "k centroid vectors or n_subspaces x n_codes codebook vectors of a persisted or user-built index — index metadata re-entered as literals"),
     ("sources/flight_sql.py", "do_put"): (2, "DML execution trigger (ExecuteUpdate): Spark SQL command frames are empty/row-count-sized — collect() is the action, not a data pull"),
     ("sources/bloom_index.py", "point_lookup"): (1, "bloom-admitted (file, row_group) candidates — file-METADATA-scale, the pruning index's output"),
     ("testing/oracle.py", "run_compare"): (1, "test harness by design — sf-bounded oracle comparison"),

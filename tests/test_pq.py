@@ -71,6 +71,21 @@ def test_training_job_counts(spark, vecs, jobs_run):
     assert (len(ivf_jobs), len(pq_jobs)) == (9, 6)
 
 
+def test_serving_jobs_are_pinned(spark, vecs, jobs_run):
+    # the codebooks and centroids a trainer returns carry their driver
+    # rows, so encoding, the ADC tables and the probe collect none again
+    queries = vecs.where(F.col("vec_id") % 12 == 0).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
+    )
+    with jobs_run() as pq_jobs:
+        pq_topk(vecs, queries, k=5, m=4, n_codes=4, n_iters=2, refine_factor=3).collect()
+    with jobs_run() as ivf_pq_jobs:
+        ivf_pq_topk(
+            vecs, queries, k=5, n_clusters=4, n_probe=2, m=4, n_codes=4, n_iters=2
+        ).collect()
+    assert (len(pq_jobs), len(ivf_pq_jobs)) == (12, 19)
+
+
 def test_encode_codes_in_range(spark, vecs):
     cb = pq_train_codebooks(vecs, m=4, n_codes=4, n_iters=2)
     coded = pq_encode(vecs, cb)
